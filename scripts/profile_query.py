@@ -6,8 +6,10 @@ Usage: python scripts/profile_query.py <query> [reps]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32).
 
-Prints, for the LAST rep (warm): every job with duration, and the
-top-15 stages by duration with name + task count + shuffle bytes.
+Prints, for the LAST rep (warm): the build phase's wall time, py4j
+round trips and Spark jobs (everything the query call does before the
+action), every job with duration, and the top-15 stages by duration
+with name + task count + shuffle bytes.
 """
 from __future__ import annotations
 
@@ -24,6 +26,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 def main(name: str, reps: int = 2) -> int:
     import __spark_entry__ as entrymod
     from simba_spark.context import get_spark
+    from simba_spark.driver_cost import DriverCost
 
     spark = get_spark(app_name=f"profile_{name}", master=f"local[{CPUS}]",
                       shuffle_partitions=int(CPUS),
@@ -50,11 +53,12 @@ def main(name: str, reps: int = 2) -> int:
     jt = spark._jsparkSession.sparkContext().statusTracker()
     t0 = time.time()
     sc.setJobDescription(f"profile:{name}")
-    df = fn(spark, SF_DIR)
-    t_build = time.time() - t0
+    with DriverCost(spark) as build:
+        df = fn(spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
     t_total = time.time() - t0
-    print(f"\n=== {name}: total {t_total:.2f}s (plan build {t_build:.2f}s) ===")
+    print(f"\n=== {name}: total {t_total:.2f}s (plan build {build.seconds:.2f}s, "
+          f"{build.py4j_calls} py4j round trips, {build.jobs} jobs) ===")
 
     store = spark._jsparkSession.sparkContext().ui().get().store()
     jobs = store.jobsList(None)

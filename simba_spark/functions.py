@@ -3,9 +3,11 @@
 The reference evaluates spatial predicates row-at-a-time in interpreted
 Catalyst expressions that opt out of codegen
 (ref: expression/InRange.scala:31-32 ``CodegenFallback``). Our engine
-compiles the same predicates to plain Column arithmetic, so they run
+compiles the same predicates to plain Catalyst arithmetic, so they run
 inside whole-stage codegen and push down to Parquet scans — strictly
-better than the reference design (SURVEY.md §4.2).
+better than the reference design (SURVEY.md §4.2). Given column names,
+the predicate builders emit one ``F.expr`` over SQL text (one py4j round
+trip, not one per op); given Column arguments, they chain Column ops.
 
 Semantics contract (SURVEY.md §1.5):
 - range  = closed-interval intersection  (ref: InRange.scala:35-42)
@@ -30,16 +32,50 @@ def _cols(cols) -> list:
 
 
 # ---------------------------------------------------------------------------
+# SQL text. Every PySpark Column op costs several py4j round trips on the
+# driver (call-site capture), so a predicate built op by op costs hundreds
+# of them; the same predicate parsed from one F.expr string costs one.
+
+
+def _dlit(v: float) -> str:
+    """Exact double literal as SQL text (repr round-trips IEEE)."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
+def _sql_names(cols):
+    """Backquoted SQL identifiers for ``cols``, or None when the SQL-text
+    builders cannot stand in for the Column ones: a Column argument, or
+    a name ``F.col`` parses as a path (a dot or backquote in it)."""
+    if all(isinstance(c, str) and "." not in c and "`" not in c
+           for c in cols):
+        return [f"`{c}`" for c in cols]
+    return None
+
+
+def _dist2_sql(names: Sequence[str], point: Sequence[float]) -> str:
+    """SQL text of :func:`dist2` — the same left fold
+    ``((0.0 + d0*d0) + d1*d1)``, so the doubles are bit-identical."""
+    out = _dlit(0.0)
+    for c, p in zip(names, point):
+        d = f"({c} - {_dlit(p)})"
+        out = f"({out} + {d} * {d})"
+    return out
+
+
+# ---------------------------------------------------------------------------
 # distances
 
 
 def dist2(cols, point: Sequence[float]) -> Column:
     """Squared Euclidean distance from the N columns to a literal point.
     Kept squared in filters to avoid a sqrt per row."""
-    cs = _cols(cols)
-    assert len(cs) == len(point), "dimension mismatch"
+    cols = list(cols)
+    assert len(cols) == len(point), "dimension mismatch"
+    names = _sql_names(cols)
+    if names is not None:
+        return F.expr(_dist2_sql(names, point))
     out = F.lit(0.0)
-    for c, p in zip(cs, point):
+    for c, p in zip(_cols(cols), point):
         d = c - F.lit(float(p))
         out = out + d * d
     return out
@@ -77,10 +113,15 @@ def in_range(cols, low: Sequence[float], high: Sequence[float]) -> Column:
     Parquet reader (``PushedFilters``) and prunes row groups via
     min/max stats, which is our analog of the reference's local-index
     range probe."""
-    cs = _cols(cols)
-    assert len(cs) == len(low) == len(high), "dimension mismatch"
+    cols = list(cols)
+    assert len(cols) == len(low) == len(high), "dimension mismatch"
+    names = _sql_names(cols)
+    if names is not None:
+        return F.expr(" AND ".join(
+            f"{c} >= {_dlit(lo)} AND {c} <= {_dlit(hi)}"
+            for c, lo, hi in zip(names, low, high)) or "true")
     pred = F.lit(True)
-    for c, lo, hi in zip(cs, low, high):
+    for c, lo, hi in zip(_cols(cols), low, high):
         pred = pred & (c >= F.lit(float(lo))) & (c <= F.lit(float(hi)))
     return pred
 
@@ -88,7 +129,12 @@ def in_range(cols, low: Sequence[float], high: Sequence[float]) -> Column:
 def in_circle_range(cols, center: Sequence[float], radius: float) -> Column:
     """Point-in-ball with closed boundary: dist^2 <= r^2
     (ref: InCircleRange.scala:43-49, Circle.scala:69)."""
+    cols = list(cols)
     r = float(radius)
+    names = _sql_names(cols)
+    if names is not None:
+        assert len(names) == len(center), "dimension mismatch"
+        return F.expr(f"{_dist2_sql(names, center)} <= {_dlit(r * r)}")
     return dist2(cols, center) <= F.lit(r * r)
 
 

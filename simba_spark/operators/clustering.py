@@ -47,16 +47,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import _dlit
+
 # Measured cliff (sf0.1 embeddings, 64-d, local[8]): k*d = 512 distance
 # terms codegen-split cleanly across the per-centroid columns; 768+
 # trips Janino (64 KB method limit) — whole-stage compilation fails with
 # a stack-trace retry per task and the interpreted fallback runs ~3x
 # slower. Above this, route assignment through the Arrow kernel.
 _CODEGEN_MAX_TERMS = 512
-
-
-def _dlit(v: float) -> str:
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
 
 
 def _elem(vec_col: str, i: int) -> str:
@@ -486,7 +484,9 @@ def dbscan(
     skinny groupBy; components run the pointer-doubling
     :func:`.dedup.connected_components` (O(log diameter) rounds);
     border resolution is one core-labeled join + min-aggregate. No
-    driver state.
+    driver state, but Spark jobs run when the DataFrame is built: the
+    eager checkpoints of the points and pairs and every component
+    round fire during the call, not in the caller's action.
     """
     if float(eps) <= 0:
         raise ValueError("eps must be > 0")

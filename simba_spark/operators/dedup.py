@@ -375,7 +375,10 @@ def connected_components(
       was a full extra shuffle join per round.
 
     Labels are localCheckpoint'd each round to truncate lineage (no
-    exponentially-growing plan); no adjacency ever collects.
+    exponentially-growing plan); no adjacency ever collects. The rounds
+    run when the DataFrame is built: each checkpoint and convergence
+    probe is a Spark job fired during the call, not in the caller's
+    action.
 
     Raises RuntimeError if max_iter rounds pass without convergence —
     silently returning partial labels would mislabel clusters.

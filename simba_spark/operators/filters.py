@@ -24,8 +24,11 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
+import pyarrow as pa
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import dist2, in_circle_range, in_range
 
@@ -95,8 +98,10 @@ def knn(
     runs instead: phase 1 answers kNN over the smallest partition prefix
     (by bounds-box min-dist) holding >= k rows, its kth distance θ then
     prunes the final scan to partitions with minDist(q, bounds) <= θ.
-    Only k distances ever reach the driver; at 10k partitions the final
-    scan touches a handful instead of all.
+    Only k rows reach the driver, via Arrow, in one job when phase 1 is
+    final (its rows are then the answer); at 10k partitions the final
+    scan touches a handful instead of all. Phase 1 runs when the
+    DataFrame is built.
     """
     lay = registry.layout_for(df) if registry is not None else None
     if (
@@ -110,20 +115,29 @@ def knn(
     return _knn_scan(df, cols, query_point, k, tiebreak)
 
 
-def _knn_scan(df, cols, query_point, k, tiebreak):
-    d2 = dist2(cols, query_point).alias("__simba_d2")
-    order = [F.col("__simba_d2").asc()]
+_D2 = "__simba_d2"
+
+
+def _knn_ranked(df, cols, query_point, k, tiebreak):
+    """The k nearest rows with their squared distance as ``__simba_d2``,
+    in (distance, tiebreak) order."""
+    # ascending is the default order; F.expr skips F.col's call-site
+    # capture (a dozen py4j round trips per Column op)
+    order = [F.expr(_D2)]
     if tiebreak is not None:
-        order.append(F.col(tiebreak).asc())
+        order.append(F.col(tiebreak))
     return (
-        df.withColumn("__simba_d2", d2)
+        df.withColumn(_D2, dist2(cols, query_point))
         # a null distance (null key coordinates) never qualifies — without
         # this, Spark's NULLS-FIRST asc would hand nulls the top-k slots
-        .filter(F.col("__simba_d2").isNotNull())
+        .filter(f"{_D2} IS NOT NULL")
         .orderBy(*order)
         .limit(int(k))
-        .drop("__simba_d2")
     )
+
+
+def _knn_scan(df, cols, query_point, k, tiebreak):
+    return _knn_ranked(df, cols, query_point, k, tiebreak).drop(_D2)
 
 
 def _bounds_mindist2(bounds_row, cols, q):
@@ -150,7 +164,8 @@ def _knn_via_layout(lay, cols, query_point, k, tiebreak):
     >= k rows (any >=k-row subset yields a valid upper bound θ).
     Phase 2: exact kNN over the z-cover of the ball box [q-θ, q+θ] —
     every true neighbor has dist <= θ, hence lies inside the cover.
-    Only k distances ever reach the driver."""
+    Only k rows ever reach the driver, via Arrow: when phase 1 is final
+    they are the answer, in one job."""
     q = [float(x) for x in query_point]
     k = int(k)
     ranked = sorted(lay.bounds, key=lambda b: _bounds_mindist2(b, cols, q))
@@ -164,34 +179,65 @@ def _knn_via_layout(lay, cols, query_point, k, tiebreak):
             break
     if acc < k or len(sel) == len(ranked):
         return _knn_scan(lay.pruned_scan(None), cols, q, k, tiebreak)  # tiny table
-    sel_zbs = [int(b["zb"]) for b in sel]
-    phase1 = _knn_scan(
-        lay.pruned_scan(lay.z_ranges_for_buckets(sel_zbs)), cols, q, k, tiebreak
-    )
-    # θ = kth distance of phase 1 (exactly k scalars to the driver — the
-    # same driver traffic as the reference's takeOrdered merge)
-    d2_rows = phase1.select(dist2(cols, q).alias("d2")).collect()
-    if len(d2_rows) < k:
-        # bucket counts promised >= k rows but null coordinates left
-        # phase 1 short — its max distance is NOT a kth-NN bound, so
-        # pruning with it could drop true neighbors; scan exactly
+    sel_zbs = {int(b["zb"]) for b in sel}
+    phase1 = _knn_ranked(
+        lay.pruned_scan(lay.z_ranges_for_buckets(sorted(sel_zbs))),
+        cols, q, k, tiebreak)
+    rows, theta2 = _phase1_rows(phase1, _D2, k)
+    if theta2 is None:
         return _knn_scan(lay.pruned_scan(None), cols, q, k, tiebreak)
-    theta2 = max(r["d2"] for r in d2_rows)
-    theta = theta2 ** 0.5
 
     # phase 2: if no other bucket's box can hold a closer-or-tied point,
     # phase 1 is final; else rescan the ball box via its z-cover
     others_reach = any(
         _bounds_mindist2(b, cols, q) <= theta2
         for b in ranked
-        if int(b["zb"]) not in set(sel_zbs)
+        if int(b["zb"]) not in sel_zbs
     )
     if not others_reach:
-        return phase1
+        return _local_answer(phase1, rows, drop=_D2)
+    theta = theta2 ** 0.5
     ball_lo = [c - theta for c in q]
     ball_hi = [c + theta for c in q]
     ranges = lay.z_ranges_for_box(ball_lo, ball_hi)
     return _knn_scan(lay.pruned_scan(ranges), cols, q, k, tiebreak)
+
+
+def _phase1_rows(phase1: DataFrame, dcol: str, k: int):
+    """Run phase 1 once: its rows as an Arrow table (distance column
+    ``dcol`` kept) and θ, its kth distance. A column type Arrow cannot
+    carry (e.g. a year-month interval) fetches the distances only. θ is
+    None when null coordinates left phase 1 short of k rows: its max
+    distance is then no kth-NN bound, and pruning with it could drop
+    true neighbors."""
+    try:
+        rows = phase1.toArrow()
+    except PySparkTypeError:
+        rows = phase1.select(dcol).toArrow()
+    if rows.num_rows == 0 or rows.num_rows < k:
+        return rows, None
+    return rows, max(rows.column(dcol).to_pylist())
+
+
+def _local_answer(phase1: DataFrame, rows, drop: Optional[str] = None):
+    """Phase 1's fetched rows as the final answer: a driver-local
+    DataFrame (its action fires no job) with phase1's schema, minus
+    ``drop``, and its (distance, tiebreak) row order. Built from the
+    Arrow table: ``createDataFrame`` on a list of Rows would go through
+    a Python RDD, ~20x slower. When the rows did not come back, or
+    Arrow cannot rebuild them (PySpark fails on a struct holding an
+    array of non-null elements), the answer is phase 1 itself, run
+    again by the action."""
+    fields = phase1.schema.fields
+    if rows.num_columns == len(fields):  # the full rows came back
+        if drop is not None:
+            rows = rows.drop_columns([drop])
+        try:
+            return phase1.sparkSession.createDataFrame(
+                rows, T.StructType([f for f in fields if f.name != drop]))
+        except pa.ArrowException:
+            pass
+    return phase1 if drop is None else phase1.drop(drop)
 
 
 # ---------------------------------------------------------------------------

@@ -40,6 +40,8 @@ from typing import Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .filters import _local_answer, _phase1_rows, range_query
+
 EARTH_RADIUS_KM = 6371.0088
 #: km per degree of latitude (and of longitude at the equator)
 _KM_PER_DEG = EARTH_RADIUS_KM * math.pi / 180.0
@@ -115,8 +117,6 @@ def geo_circle_range(
                 boxes = [(lo, hi)]
     dist = haversine_km(lat, lon, F.lit(clat), F.lit(clon))
     if registry is not None:
-        from .filters import range_query
-
         parts = [
             range_query(df, [lat_col, lon_col], (lat_lo, blo),
                         (lat_hi, bhi), registry=registry)
@@ -157,8 +157,9 @@ def geo_knn(
     a spherical lower bound on box distance) holding >= k rows; its
     kth haversine distance θ prunes the final scan to the z-cover of
     the θ-ball's lat/lon box (antimeridian wrap = union of two
-    covers, polar cap = full-lon box). Only k distances reach the
-    driver; pruned buckets cost no I/O."""
+    covers, polar cap = full-lon box). Only k rows reach the driver,
+    via Arrow, in one job when phase 1 is final; pruned buckets cost
+    no I/O."""
     clat, clon = float(center[0]), float(center[1])
     lay = registry.layout_for(df) if registry is not None else None
     if (
@@ -248,7 +249,8 @@ def _geo_knn_via_layout(lay, lat_col, lon_col, center, k, tiebreak,
                         out_col):
     """Two-phase spherical bound-and-prune over a (lat, lon) z-order
     layout — the geo mirror of filters._knn_via_layout (ref:
-    IndexedRelationScan.scala:117-151, spherical metric)."""
+    IndexedRelationScan.scala:117-151, spherical metric), sharing its
+    phase-1 fetch: one job when phase 1 is final."""
     k = int(k)
     q = center
     ranked = sorted(lay.bounds, key=lambda b: _geo_bounds_min_km(b, q))
@@ -261,25 +263,22 @@ def _geo_knn_via_layout(lay, lat_col, lon_col, center, k, tiebreak,
     if acc < k or len(sel) == len(ranked):
         return _geo_knn_scan(lay.pruned_scan(None), lat_col, lon_col,
                              q, k, tiebreak, out_col)
-    sel_zbs = [int(b["zb"]) for b in sel]
+    sel_zbs = {int(b["zb"]) for b in sel}
     phase1 = _geo_knn_scan(
-        lay.pruned_scan(lay.z_ranges_for_buckets(sel_zbs)),
+        lay.pruned_scan(lay.z_ranges_for_buckets(sorted(sel_zbs))),
         lat_col, lon_col, q, k, tiebreak, out_col)
-    d_rows = phase1.select(out_col).collect()
-    if len(d_rows) < k:
-        # selected buckets held >= k rows by count but < k usable
-        # (null-coordinate) distances — no valid θ bound; scan exactly
+    rows, theta = _phase1_rows(phase1, out_col, k)
+    if theta is None:
         return _geo_knn_scan(lay.pruned_scan(None), lat_col, lon_col,
                              q, k, tiebreak, out_col)
-    theta = max(r[out_col] for r in d_rows)
 
     others_reach = any(
         _geo_bounds_min_km(b, q) <= theta
         for b in ranked
-        if int(b["zb"]) not in set(sel_zbs)
+        if int(b["zb"]) not in sel_zbs
     )
     if not others_reach:
-        return phase1
+        return _local_answer(phase1, rows)
     ranges = []
     for lat_lo, lat_hi, lon_lo, lon_hi in _geo_ball_boxes(q, theta):
         rs = lay.z_ranges_for_box([lat_lo, lon_lo], [lat_hi, lon_hi])

@@ -113,6 +113,9 @@ def pagerank(
     SQL oracle, and the common choice for corpus-quality priors where
     a bounded-cost approximation is the point.
 
+    Runs Spark jobs when the DataFrame is built, not when the caller's
+    action runs: each iteration's rank frame is an eager checkpoint.
+
     ``salt_hot_nodes`` > 0 splits each destination's contribution sum
     across that many salt buckets (two-step aggregate keyed on
     (dst, salt-of-src) then dst). On a web graph a dominant in-degree
@@ -1768,9 +1771,13 @@ def louvain_moves(
     node-scale side shuffles each round), cand⋈tot on the candidate
     community, then ⋈comm on the node id, whose exchange the final
     ``min_by`` argmax reuses (groupBy on the join key — no extra
-    shuffle). 2m is a 1-row broadcast (in-plan, no collect);
-    assignments localCheckpoint lazily (the pagerank discipline).
-    No driver state, no cartesian.
+    shuffle). 2m is a 1-row broadcast (in-plan, not collected). No
+    cartesian.
+
+    Runs Spark jobs when the DataFrame is built, not when the caller's
+    action runs: the initial and per-round assignments are eager
+    checkpoints (lazy ones, referenced several times per round, raced
+    under concurrent AQE futures).
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -2057,10 +2064,15 @@ def louvain(
     community, so later levels run the same three-equi-join rounds on
     frames orders of magnitude smaller. Contraction is two node-keyed
     equi-joins + one canonical-pair groupBy on the (already weighted)
-    edge set; each level's Q score is two original-scale join-
-    aggregates reduced to a 1-row frame, and the best-level selection
-    is an in-plan broadcast CASE — 2m is level-invariant, computed
-    once. No driver state, no cartesian, no collect.
+    edge set. 2m is level-invariant: collected once (one row) and
+    planned as a literal. Each level's Q score is computed at
+    CONTRACTED scale (community-scale aggregates reduced to a 1-row
+    frame), and the best-level selection is an in-plan broadcast CASE.
+    No cartesian.
+
+    Runs Spark jobs when the DataFrame is built, not when the caller's
+    action runs: the 2m collect and the eager per-level and per-round
+    checkpoints all fire during the call.
 
     ``level1`` injects a PRECOMPUTED level-1 assignment (a ``(node,
     community)`` frame from :func:`louvain_moves` on the SAME edges
@@ -2255,13 +2267,14 @@ def louvain(
                 F.col("community").alias("node")
             ).agg(F.sum("s").alias("s"))
         ).groupBy("node").agg(F.sum("s").alias("s"))
-        # node universe for the next level = every community: each has
-        # >= 1 member with >= 1 edge and every member edge lands in ce
-        # with that community as a key of g — so the former node-scale
-        # cm.select(community).distinct() is a community-pair-scale
-        # distinct over g's keys (exactly the same set)
+        # node universe for the next level = every community: g's keys
+        # hold each community with an edge at this level, and carried
+        # holds the rest — those with self mass only (e.g. a component
+        # that collapsed to one node a level earlier), which have no
+        # ce row. Both are community-scale, unlike cm.
         sl = (
             g.select("a").unionByName(g.select(F.col("b").alias("a")))
+            .unionByName(carried.select(F.col("node").alias("a")))
             .distinct().select(F.col("a").alias("node"))
             .join(carried, "node", "left")
             .select("node",

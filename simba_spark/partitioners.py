@@ -34,6 +34,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions import _dlit
+
 #: the partition-id column every partitioner attaches
 PART_COL = "__simba_part"
 
@@ -43,11 +45,6 @@ def _sample(df: DataFrame, cols: Sequence[str], cap: int, seed: int):
     from .operators.knn_join import _hash_sample
 
     return _hash_sample(df, list(cols), cap, seed)
-
-
-def _dlit(v: float) -> str:
-    """Exact double literal as SQL text (repr round-trips IEEE)."""
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
 
 
 def _darray_expr(values: Sequence[float]):

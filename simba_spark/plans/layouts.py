@@ -126,15 +126,16 @@ class Layout:
             # provably empty — keep schema, scan nothing
             return self.data.filter(F.lit(False))
         if z_ranges is not None:
+            # SQL text, one parse per filter: a Column chain of ~100
+            # intervals costs ~1,000 py4j round trips on the driver
             if self.source_path is not None:
                 zbs = buckets_for_ranges(z_ranges, self.zshift)
                 if zbs is not None:
-                    base = base.filter(F.col(ZBCOL).isin(zbs))
-            zpred = None
-            for a, b in z_ranges:
-                term = F.col(ZCOL).between(a, b)
-                zpred = term if zpred is None else (zpred | term)
-            base = base.filter(zpred)
+                    base = base.filter(
+                        f"{ZBCOL} IN ({', '.join(str(int(z)) for z in zbs)})")
+            base = base.filter(" OR ".join(
+                f"({ZCOL} >= {int(a)}L AND {ZCOL} <= {int(b)}L)"
+                for a, b in z_ranges))
         drop = [c for c in (ZCOL, ZBCOL) if c in base.columns]
         return base.drop(*drop)
 
@@ -433,7 +434,7 @@ class LayoutRegistry:
         IndexedRelationScan.scala:169 to skip the local probe when the
         query ball swallows a whole partition): buckets whose bounds box
         lies ENTIRELY inside the ball scan with no per-row distance
-        arithmetic (null-guard only — bounds ignore nulls); partially
+        arithmetic (null and NaN guard only); partially
         covered buckets keep the sargable box pre-filter + exact circle
         test. Returns None when no bucket is fully covered — the caller
         falls back to the ordinary pruned scan, which already handles
@@ -470,10 +471,8 @@ class LayoutRegistry:
 
         parts = []
         cov = lay.pruned_scan(lay.z_ranges_for_buckets(covered))
-        guard = F.lit(True)
-        for c in lay.cols:
-            guard = guard & F.col(c).isNotNull()
-        parts.append(cov.filter(guard))
+        # bounds ignore nulls, and NaN never passes the circle test
+        parts.append(cov.dropna(subset=lay.cols))
         if partial:
             par = lay.pruned_scan(lay.z_ranges_for_buckets(partial))
             parts.append(

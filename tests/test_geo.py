@@ -493,6 +493,7 @@ def test_geo_knn_layout_routed_matches_bruteforce(spark, tmp_path):
     layout equals brute force for centers incl. near-pole and
     near-antimeridian, and phase 2 scans a PRUNED file set."""
     from simba_spark.context import SimbaContext
+    from simba_spark.operators.geo import geo_knn
 
     ctx = SimbaContext(spark)
     pts = _random_points(3000, 101, lat_range=(-89, 89))
@@ -510,6 +511,9 @@ def test_geo_knn_layout_routed_matches_bruteforce(spark, tmp_path):
                 pts, key=lambda p: (_hav((p[1], p[2]), center),
                                     p[0]))][:7]
             assert got == want, center
+            # every column, dist_km included, equals the unrouted read
+            assert out.collect() == geo_knn(
+                df, "lat", "lon", center, 7, tiebreak="p_id").collect()
     finally:
         ctx.drop_index("geo_knn_idx")
 

@@ -263,17 +263,20 @@ def test_louvain_levels_duckdb_parity(spark):
     from simba_spark.operators.graph import louvain, louvain_sql
 
     rng = random.Random(11)
-    edges = list({(rng.randrange(40), rng.randrange(40))
+    dense = list({(rng.randrange(40), rng.randrange(40))
                   for _ in range(140)})
-    df = spark.createDataFrame(edges, "src long, dst long")
-    con = duckdb.connect()
-    con.register("e", pd.DataFrame(edges, columns=["src", "dst"]))
-    for levels in (2, 3):
-        got = sorted(map(tuple,
-                         louvain(df, iters=3, levels=levels).collect()))
-        oracle = sorted(map(tuple, con.execute(
-            louvain_sql("e", iters=3, levels=levels)).fetchall()))
-        assert got == oracle
+    # + a disconnected triangle: it collapses to one node with only
+    # self mass after level 1, and must survive levels 2 and 3
+    for edges in (dense, dense + [(100, 101), (101, 102), (102, 100)]):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        con = duckdb.connect()
+        con.register("e", pd.DataFrame(edges, columns=["src", "dst"]))
+        for levels in (2, 3):
+            got = sorted(map(tuple,
+                             louvain(df, iters=3, levels=levels).collect()))
+            oracle = sorted(map(tuple, con.execute(
+                louvain_sql("e", iters=3, levels=levels)).fetchall()))
+            assert got == oracle
 
 
 # --- k-truss (edge-support peeling) ---------------------------------------------

@@ -103,6 +103,39 @@ def test_layout_routed_knn_equals_naive(spark):
         ctx.drop_index("ev_knn_idx")
 
 
+@pytest.mark.parametrize("extra", [
+    "INTERVAL '1' YEAR",                      # no Arrow type
+    "named_struct('b', array(1.0D, CAST(id AS DOUBLE)))",  # not rebuilt
+])
+def test_layout_knn_arrow_fallback(spark, extra):
+    """A final phase 1 answers from its Arrow-fetched rows; a column
+    Arrow cannot carry, or PySpark cannot rebuild from Arrow (a struct
+    holding an array of non-null elements), runs phase 1 again in the
+    action instead — with the same answer."""
+    from simba_spark.context import SimbaContext
+    from simba_spark.operators.filters import knn
+
+    ctx = SimbaContext(spark)
+    df = spark.range(3000).selectExpr(
+        "id", "CAST(id % 60 AS DOUBLE) AS x", "CAST(id DIV 60 AS DOUBLE) AS y",
+        f"{extra} AS extra")
+    lay = ctx.create_index(df, ["x", "y"], "arrow_fallback_idx", kind="zorder")
+    try:
+        # k=1 at a data point: θ = 0, so phase 1 is final
+        for q, k in [((10.0, 20.0), 1), ((30.5, 25.5), 7)]:
+            routed = ctx.knn(lay.data, ["x", "y"], q, k, tiebreak="id")
+            if k == 1:
+                plan = routed._jdf.queryExecution().executedPlan().toString()
+                assert "LocalTableScan" not in plan, plan
+            naive = knn(df, ["x", "y"], q, k, tiebreak="id")
+            # Python cannot hold a year-month interval: compare as text
+            shown = ("id", "x", "y", "CAST(extra AS STRING)")
+            assert routed.selectExpr(*shown).collect() == \
+                naive.selectExpr(*shown).collect()
+    finally:
+        ctx.drop_index("arrow_fallback_idx")
+
+
 def test_layout_knn_prunes_partitions(spark):
     """The θ-bound phase-2 partition set must be a strict subset on
     clustered data (the point of the layout)."""

@@ -146,6 +146,64 @@ def test_layout_routing_survives_reread(spark, tmp_path):
         ctx.drop_index("reread_idx")
 
 
+@pytest.fixture(scope="module")
+def persisted_ev(spark, tmp_path_factory):
+    """(ctx, clean frame) of a persisted z-order layout of the events."""
+    from simba_spark.context import SimbaContext
+
+    ctx = SimbaContext(spark)
+    ctx.create_index(_ev(spark), ["value", "uid"], "budget_idx", kind="zorder")
+    ctx.persist_index("budget_idx", str(tmp_path_factory.mktemp("budget")))
+    yield ctx, ctx.layouts.get("budget_idx").data
+    ctx.drop_index("budget_idx")
+
+
+def _cost(spark, fn):
+    from simba_spark.driver_cost import DriverCost
+
+    with DriverCost(spark) as cost:
+        fn()
+    return cost
+
+
+def test_indexed_reads_fire_one_job_each(spark, persisted_ev):
+    """Call to rows, an indexed range or circle read is one Spark job,
+    and so is an indexed kNN read whose phase 1 is final: its rows are
+    fetched once (Arrow) and returned as a driver-local frame, so the
+    action fires no second job. k=1 at a data point makes phase 1 final
+    (θ = 0 and bucket boxes are disjoint)."""
+    ctx, ev = persisted_ev
+    cols = ["value", "uid"]
+    assert _cost(spark, lambda: ctx.range_query(
+        ev, cols, (20.0, 30.0), (60.0, 90.0)).collect()).jobs == 1
+    assert _cost(spark, lambda: ctx.circle_range(
+        ev, cols, (40.0, 60.0), 30.0).collect()).jobs == 1
+    p = ev.select(*cols).orderBy("event_id").first()
+    knn = ctx.knn(ev, cols, tuple(p), 1, tiebreak="event_id")
+    assert "LocalTableScan" in _plan(knn), _plan(knn)
+    assert _cost(spark, lambda: ctx.knn(
+        ev, cols, tuple(p), 1, tiebreak="event_id").collect()).jobs == 1
+    # the local answer is the scan's answer, every column (ts is NTZ)
+    from simba_spark.operators.filters import knn as knn_scan
+
+    assert knn.collect() == knn_scan(
+        _ev(spark), cols, tuple(p), 1, tiebreak="event_id").collect()
+
+
+def test_indexed_range_build_py4j_budget(spark, persisted_ev):
+    """Building an indexed range read is a few dozen py4j round trips:
+    the predicate and the z-interval cover are each one parsed SQL
+    expression. Built op by op as Columns, the same reads took
+    300-1,700 (every Column op is ~13 round trips of call-site
+    capture in PySpark 4.1)."""
+    ctx, ev = persisted_ev
+    for lo, hi in [((20.0, 30.0), (60.0, 90.0)), ((0.0, 0.0), (5.0, 5.0)),
+                   ((10.0, 100.0), (400.0, 900.0)), ((-1.0, 7.0), (1.0, 9.0))]:
+        cost = _cost(spark, lambda: ctx.range_query(ev, ["value", "uid"], lo, hi))
+        assert cost.jobs == 0
+        assert cost.py4j_calls <= 60, (lo, hi, cost.py4j_calls)
+
+
 def test_st_sql_functions_stay_jvm_side(spark):
     """The st_* SQL surface must compile to inlined higher-order-function
     expressions — a BatchEvalPython/ArrowEvalPython node means per-row
