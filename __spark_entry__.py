@@ -2243,8 +2243,8 @@ def q_pagerank(spark, sf_dir):
     """Fixed-iteration PageRank (operators.graph.pagerank) over the
     customer→supplier trade graph (distinct (o_custkey, l_suppkey)
     pairs via orders⋈lineitem; suppliers with suppkey%3==0 link back,
-    the rest are dangling). Per iteration: one join + one skinny
-    groupBy, dangling mass as a 1-row broadcast, localCheckpoint'd
+    the rest are dangling). Per iteration one SQL statement: one join
+    + one aggregate that also carries the dangling mass, checkpointed
     ranks. Oracle: the same 6 iterations unrolled as chained CTEs."""
     from simba_spark.operators.graph import pagerank
 

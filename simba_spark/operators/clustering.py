@@ -43,11 +43,12 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import _dlit
+from ._bcast import bcast_fits
 
 # Measured cliff (sf0.1 embeddings, 64-d, local[8]): k*d = 512 distance
 # terms codegen-split cleanly across the per-centroid columns; 768+
@@ -480,13 +481,17 @@ def dbscan(
 
     Scale: the eps-neighbor pairs come from the grid distance join
     (cell equi-join, never all-pairs — ``algo`` passes through, with
-    'cross' as the opt-in oracle path); neighbor counts are one
-    skinny groupBy; components run the pointer-doubling
-    :func:`.dedup.connected_components` (O(log diameter) rounds);
-    border resolution is one core-labeled join + min-aggregate. No
-    driver state, but Spark jobs run when the DataFrame is built: the
-    eager checkpoints of the points and pairs and every component
-    round fire during the call, not in the caller's action.
+    'cross' as the opt-in oracle path); neighbor counts and the core
+    flag are one aggregate over the points and both ends of every
+    pair; components run the pointer-doubling
+    :func:`.dedup.connected_components` (O(log diameter) rounds) over
+    the core-core pairs, each pair once; the labels, border resolution
+    and roles are one SQL statement the caller's action runs. The
+    point-sized sides are broadcast when the point count (observed on
+    the neighbor-count checkpoint) fits :func:`._bcast.bcast_fits`.
+    No driver state beyond that count, but Spark jobs run when the
+    DataFrame is built: the eager checkpoints of the points, pairs and
+    neighbor counts and every component round fire during the call.
     """
     if float(eps) <= 0:
         raise ValueError("eps must be > 0")
@@ -495,60 +500,66 @@ def dbscan(
     from .dedup import connected_components
     from .distance_join import self_distance_join
 
+    spark = df.sparkSession
+    coords = ", ".join(f"`{c}`" for c in cols)
     # EAGER (r12): the self-distance-join references base twice and
-    # sym's union references pairs twice — concurrent first-
+    # the statements below read pairs five times — concurrent first-
     # materialization of a lazy checkpoint recomputes its final stage
     # per reference (the louvain lesson), here the caller's whole
     # point-build scan and the grid join's post-exchange stage
-    base = df.select(F.col(id_col).alias("pid"),
-                     *[F.col(c) for c in cols]).localCheckpoint(eager=True)
-    pairs = self_distance_join(
-        base, list(cols), float(eps), id_col="pid", algo=algo
-    ).select(F.col("a_pid").alias("a"), F.col("b_pid").alias("b")) \
-        .localCheckpoint(eager=True)
-    sym = pairs.unionByName(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=False)
-    ncnt = sym.groupBy(F.col("a").alias("pid")).agg(
-        (F.count(F.lit(1)) + F.lit(1)).alias("__n"))
-    pts = (
-        base.select("pid").join(ncnt, "pid", "left")
-        .select("pid",
-                F.coalesce("__n", F.lit(1).cast("long")).alias("__n"))
-        .withColumn("__core", F.col("__n") >= int(min_pts))
-        .localCheckpoint(eager=False)
+    base = spark.sql(f"SELECT `{id_col}` AS pid, {coords} FROM {{df}}",
+                     df=df).localCheckpoint(eager=True)
+    pairs = spark.sql(
+        "SELECT a_pid AS a, b_pid AS b FROM {j}",
+        j=self_distance_join(base, list(cols), float(eps), id_col="pid",
+                             algo=algo),
+    ).localCheckpoint(eager=True)
+    # closed-ball size = 1 + the pairs a point is in, over one exchange;
+    # eager for the same reason (read five times below). Its observed
+    # row count lets the point-sized sides below be broadcast.
+    obs = Observation()
+    pts = spark.sql(
+        f"""SELECT pid, count(*) >= {int(min_pts)} AS __core FROM (
+  SELECT pid FROM {{base}}
+  UNION ALL SELECT a FROM {{pairs}} UNION ALL SELECT b FROM {{pairs}}
+) GROUP BY pid""",
+        base=base, pairs=pairs,
+    ).observe(obs, F.expr("count(*)").alias("n")).localCheckpoint(eager=True)
+    fits = bcast_fits(obs.get["n"])
+
+    def bc(*names):
+        return f"/*+ BROADCAST({', '.join(names)}) */" if fits else ""
+
+    core_pairs = spark.sql(
+        f"""SELECT {bc("x", "y")} p.a, p.b FROM {{pairs}} p
+JOIN {{pts}} x ON x.pid = p.a JOIN {{pts}} y ON y.pid = p.b
+WHERE x.__core AND y.__core""",
+        pairs=pairs, pts=pts,
     )
-    cores = pts.filter(F.col("__core")).select("pid")
-    core_edges = (
-        sym.join(cores.select(F.col("pid").alias("a")), "a")
-        .join(cores.select(F.col("pid").alias("b")), "b")
-    )
-    cc = connected_components(core_edges, a_col="a", b_col="b",
+    cc = connected_components(core_pairs, a_col="a", b_col="b",
                               max_iter=max_iter)
-    core_lab = (
-        cores.join(cc.select(F.col("id").alias("pid"), "component"),
-                   "pid", "left")
-        .select("pid",
-                F.coalesce("component", F.col("pid")).alias("cluster"))
-        .localCheckpoint(eager=False)
-    )
-    border = (
-        pts.filter(~F.col("__core")).select("pid")
-        .join(sym.select(F.col("a").alias("pid"),
-                         F.col("b").alias("__nb")), "pid")
-        .join(core_lab.select(F.col("pid").alias("__nb"),
-                              F.col("cluster").alias("__cl")), "__nb")
-        .groupBy("pid").agg(F.min("__cl").alias("cluster"))
-    )
-    labeled = (
-        core_lab.withColumn("role", F.lit("core"))
-        .unionByName(border.withColumn("role", F.lit("border")))
-    )
-    return (
-        pts.select("pid").join(labeled, "pid", "left")
-        .select(F.col("pid").alias(id_col),
-                F.coalesce("role", F.lit("noise")).alias("role"),
-                "cluster")
+    # a core with no core neighbor is its own cluster; a non-core point
+    # takes the minimum cluster among its core neighbors
+    return spark.sql(
+        f"""WITH lab AS (
+  SELECT {bc("c")} p.pid, coalesce(c.component, p.pid) AS cluster
+  FROM {{pts}} p LEFT JOIN {{cc}} c ON c.id = p.pid WHERE p.__core
+), border AS (
+  SELECT {bc("p", "l")} n.pid, min(l.cluster) AS cluster
+  FROM (SELECT a AS pid, b AS nb FROM {{pairs}}
+        UNION ALL SELECT b, a FROM {{pairs}}) n
+  JOIN {{pts}} p ON p.pid = n.pid AND NOT p.__core
+  JOIN lab l ON l.pid = n.nb
+  GROUP BY n.pid
+)
+SELECT {bc("l", "b")} p.pid AS `{id_col}`,
+       CASE WHEN p.__core THEN 'core'
+            WHEN b.pid IS NOT NULL THEN 'border'
+            ELSE 'noise' END AS role,
+       coalesce(l.cluster, b.cluster) AS cluster
+FROM {{pts}} p LEFT JOIN lab l ON l.pid = p.pid
+LEFT JOIN border b ON b.pid = p.pid""",
+        pts=pts, pairs=pairs, cc=cc,
     )
 
 

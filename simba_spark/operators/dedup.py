@@ -16,9 +16,10 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ._bcast import bcast_fits
 from .text import TOKEN_SPLIT_RE, fingerprint, shingles
 
 
@@ -355,142 +356,97 @@ def connected_components(
     the standard large-graph CC recipe (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14).
 
-    Raises RuntimeError if max_iter rounds pass without convergence —
-    silently returning partial labels would mislabel clusters.
+    Scale design: each round is ONE SQL statement over the previous
+    round's checkpoint, and the labels side is broadcast whenever the
+    node count (one driver scalar, observed on round 0's checkpoint
+    job) fits :func:`._bcast.bcast_fits`:
 
-    Scale design (round-8 cost pass — this loop dominated er_resolve at
-    18.9 s/sf1): per round one edges⋈labels equi-join + one groupBy +
-    one label-of-label self-join. Three shuffle-avoidance moves:
+    - the edge list is symmetrised from ONE scan of ``pairs`` and
+      deduplicated behind one hash(dst) exchange;
+    - round 0 is one aggregate over the edges (every id starts as its
+      own label), so no label frame is built before it;
+    - one union+aggregate per later round: neighbor messages (edges ⋈
+      labels) union an own row carrying the previous label, so
+      min(__cand) is least(old, min over neighbors) and max(__prev) is
+      the old label — one exchange, no message-then-join pattern;
+    - the label-of-label lookup joins the same labels side (under the
+      hint, the same broadcast);
+    - no round repartitions its output: the aggregate already leaves it
+      hash(id), and a checkpoint scan does not carry its partitioning
+      into the next round's plan (without the hint, the edge scan is
+      re-exchanged by dst every round);
+    - the convergence signal is a ``__chg`` flag computed in the label
+      update and summed by an observed metric of the round's eager
+      checkpoint job: no separate probe job.
 
-    - edges are hash-partitioned by ``dst`` ONCE (eager checkpoint
-      preserves the partitioning) so the per-round join never
-      re-shuffles the edge side;
-    - labels re-enter each round hash-partitioned by ``id`` — the same
-      checkpoint partitioning serves all three per-round uses (message
-      join, propagate join, label-of-label lookup), one repartition
-      replacing three re-shuffles;
-    - the convergence signal is a ``__chg`` flag computed IN the label
-      update (old label is already on the row) and summed off the
-      materialized checkpoint — the old separate old⋈new count join
-      was a full extra shuffle join per round.
-
-    Labels are localCheckpoint'd each round to truncate lineage (no
-    exponentially-growing plan); no adjacency ever collects. The rounds
-    run when the DataFrame is built: each checkpoint and convergence
-    probe is a Spark job fired during the call, not in the caller's
-    action.
+    Labels are localCheckpoint'd each round to truncate lineage; no
+    adjacency ever collects. The rounds run when the DataFrame is
+    built, not in the caller's action: under the hint a round is three
+    jobs (the labels broadcast, the aggregate's shuffle, the
+    checkpoint).
 
     Raises RuntimeError if max_iter rounds pass without convergence —
     silently returning partial labels would mislabel clusters.
     """
-    # symmetric edge list + self-loops keep isolated direction info
-    e = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    )
-    # The pre-checkpoint repartitions are LOAD-BEARING AT SCALE
-    # (session-7 sf1 A/B): a checkpoint's LogicalRDD preserves its
-    # physical outputPartitioning, so edges arrive hash(dst) and labels
-    # hash(id) — once the labels side outgrows the broadcast bound the
-    # per-round message join runs as an exchange-free SMJ on the
-    # pre-partitioned sides. Removing them looked like a win at sf0.1
-    # (every join broadcasts there, so the exchanges read as pure
-    # per-round job overhead) and regressed dbscan/er_resolve 15-25%
-    # at sf1 — the classic local-only trap. persist() as the carrier
-    # was measured and rejected earlier (1.2-1.7x slower both SFs).
-    # Exchanges carry NO explicit partition count so AQE sizes them.
-    # ONE exchange, not two (r12): repartition("dst") BEFORE the dedup
-    # — hash(dst) clustering satisfies the (src, dst) aggregate
-    # (subset clustering), so dropDuplicates adds no exchange and the
-    # output keeps the load-bearing hash(dst) partitioning
-    edges = (
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
-    )
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    # eager: this one init job also materializes the edges checkpoint
-    # (nodes derives from it), so round 0's two consumers of `labels`
-    # never race to materialize a lazy frame
-    labels = (
-        nodes.withColumn("component", F.col("id"))
-        .repartition("id")
-        .localCheckpoint(eager=True)
-    )
-    lab_t = labels.schema["component"].dataType.simpleString()
-
-    changed = None
-    for r in range(int(max_iter)):
-        # ONE union+aggregate replaces the old groupBy(min)-then-left-
-        # join message pattern (session-7, the louvain_moves fused-
-        # candidate trick): neighbor messages union an own-row that
-        # carries the previous label in a side column, so min(__cand)
-        # == least(old, min-over-neighbors) — the own row IS the
-        # coalesce fallback — and max(__prev) recovers the previous
-        # label (exactly one own row per id; min/max are exact on ids,
-        # so labels are bit-identical). One exchange replaces two plus
-        # a broadcast build, in a loop that is per-job-overhead-bound.
-        msgs = edges.join(labels, edges.dst == labels.id).select(
-            F.col("src").alias("id"),
-            F.col("component").alias("__cand"),
-            F.lit(None).cast(lab_t).alias("__prev"),
-        )
-        own = labels.select(
-            "id", F.col("component").alias("__cand"),
-            F.col("component").alias("__prev"))
-        base = msgs.unionByName(own).groupBy("id").agg(
-            F.min("__cand").alias("__c1"),
-            F.max("__prev").alias("__old"),
-        )
-        # pointer doubling: component <- label(component); halves
-        # the remaining chain each round => O(log diameter) total
-        # rounds. Round 0 skips the hop outright: labels map every
-        # id to itself, so label(__c1) == __c1 — the join was a
-        # provable identity (round-11 opt).
-        if r == 0:
-            upd = base.select(
-                "id", F.col("__c1").alias("component"), "__old")
-        else:
-            lol = labels.select(
-                F.col("id").alias("__cid"),
-                F.col("component").alias("__cc"),
-            )
-            upd = base.join(
-                lol, base.__c1 == lol.__cid, how="left"
-            ).select(
-                "id",
-                F.least(
-                    F.col("__c1"),
-                    F.coalesce(F.col("__cc"), F.col("__c1")),
-                ).alias("component"),
-                F.col("__old"),
-            )
-        # repartition("id") re-establishes the labels-side partitioning
-        # the next round's joins key on (scale-load-bearing, see the
-        # header note); lazy checkpoint + the convergence aggregate as
-        # the ONE action of the round: the agg's scan materializes the
-        # checkpoint RDD, so the old separate eager job disappears
-        new_labels = (
-            upd
-            .withColumn(
-                "__chg",
-                (F.col("component") != F.col("__old")).cast("long"))
-            .drop("__old")
-            .repartition("id")
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.agg(F.sum("__chg")).first()[0] or 0
-        labels = new_labels.drop("__chg")
+    spark = pairs.sparkSession
+    # symmetric edge list from one scan of pairs: repartitioning by dst
+    # BEFORE the dedup lets hash(dst) clustering serve the (src, dst)
+    # aggregate too, so the dedup adds no second exchange
+    edges = spark.sql(
+        f"""SELECT DISTINCT src, dst FROM (
+  SELECT inline(array(struct(`{a_col}` AS src, `{b_col}` AS dst),
+                      struct(`{b_col}` AS src, `{a_col}` AS dst)))
+  FROM {{pairs}} DISTRIBUTE BY dst)""",
+        pairs=pairs,
+    ).localCheckpoint(eager=False)
+    # round 0 needs no labels: every id is its own label, so its new
+    # label is least(id, min neighbor id), one aggregate over the edges.
+    # Its eager checkpoint also materializes the edges before round 1's
+    # reads, and its observed row count is the node count the broadcast
+    # guard needs.
+    obs = Observation()
+    labels = spark.sql(
+        """SELECT id, component, CAST(component <> id AS BIGINT) AS __chg
+FROM (SELECT src AS id, least(src, min(dst)) AS component
+      FROM {edges} GROUP BY src)""",
+        edges=edges,
+    ).observe(obs, F.expr("count(*)").alias("n"),
+              F.expr("sum(__chg)").alias("chg")).localCheckpoint(eager=True)
+    n, changed = obs.get["n"], obs.get["chg"] or 0
+    hint = "/*+ BROADCAST(l) */ " if bcast_fits(n) else ""
+    for _ in range(1, int(max_iter)):
         if changed == 0:
             break
+        # one union+aggregate, then pointer doubling: component <-
+        # label(component) halves the remaining chain each round =>
+        # O(log diameter) total rounds. The convergence probe rides on
+        # the checkpoint job: an observed sum of __chg, read after the
+        # eager checkpoint has run (the next round reads the labels
+        # three times, so eager also keeps them from racing to
+        # materialize).
+        obs = Observation()
+        labels = spark.sql(
+            f"""WITH base AS (
+  SELECT id, min(__cand) AS __c1, max(__prev) AS __old FROM (
+    SELECT {hint}e.src AS id, l.component AS __cand, NULL AS __prev
+    FROM {{edges}} e JOIN {{labels}} l ON e.dst = l.id
+    UNION ALL SELECT id, component, component FROM {{labels}}
+  ) GROUP BY id
+)
+SELECT id, component, CAST(component <> __old AS BIGINT) AS __chg
+FROM (SELECT {hint}b.id, b.__old,
+             least(b.__c1, coalesce(l.component, b.__c1)) AS component
+      FROM base b LEFT JOIN {{labels}} l ON b.__c1 = l.id)""",
+            edges=edges, labels=labels,
+        ).observe(obs, F.expr("sum(__chg)").alias("chg")
+                  ).localCheckpoint(eager=True)
+        changed = obs.get["chg"] or 0
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             f"({changed} labels still changing) — raise max_iter"
         )
-    return labels
+    return spark.sql("SELECT id, component FROM {labels}", labels=labels)
 
 
 def dedup_by_components(

@@ -8,13 +8,19 @@ graph" score a web-corpus pipeline uses for quality weighting
 (domain/page rank as a quality prior is standard in large-scale
 pretraining corpus curation).
 
-Scale design: per iteration ONE equi-join of ranks⋈edges on the source
-id + one skinny groupBy(dst) sum — both shuffle on node id so AQE
-reuses partitioning; the dangling-rank mass is a 1-row aggregate
-crossJoin'd back (broadcast, no driver collect in the loop); ranks are
-``localCheckpoint``'d per iteration to truncate lineage. Driver state:
-the node count (one scalar, computed once). Nothing O(nodes) ever
-reaches the driver.
+Scale design: each PageRank iteration is ONE SQL statement over the
+previous iteration's checkpoint (``spark.sql`` with the frames as
+arguments, doubles as exact literals): one edge⋈ranks equi-join on the
+source id, broadcasting the node-sized ranks side whenever the node
+count fits the shared guard (``_bcast.bcast_fits``), so the edge frame
+never shuffles, and ONE aggregate keyed on the node that computes each
+node's contribution sum and the dangling-rank mass together. Built op
+by op, an iteration cost hundreds of py4j round trips and a Catalyst
+analysis per op; as one statement it costs a handful and one analysis.
+Driver state: the node count and each iteration's dangling mass
+(scalars observed by checkpoint jobs). Nothing O(nodes) reaches
+Python; a broadcast ranks side passes through the driver JVM only
+within the guard's bound.
 
 Determinism: rank updates are double sums whose addition order varies
 with partitioning, so intermediate ranks are engine/run-stable only to
@@ -28,8 +34,11 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..functions import _dlit
+from ._bcast import bcast_fits
 
 
 #: HyperBall broadcast-form guard: the wide register table (one row of
@@ -43,30 +52,6 @@ import os as _os
 
 _HB_BCAST_MAX_BYTES = int(_os.environ.get(
     "SPARK_GRAFT_HB_BCAST_MAX_BYTES", str(128 << 20)))
-
-#: Closing-edge broadcast bound for the wedge-check triangle kernels
-#: (clustering_coefficient; measured counterproductive in k_truss's
-#: per-round support — see the comment there): the wedge frame is
-#: O(m^1.5) rows and its equi-join against the m-row edge set is the
-#: dominant shuffle; broadcasting the EDGE side (when an exact row
-#: count says ~64 B/row fits this bound) lets the wedges stream
-#: through a BroadcastHashJoin and never hit the wire. AQE's own
-#: SMJ->BHJ conversion fires only AFTER the wedge exchange is
-#: materialized, so the explicit hint — not AQE — is what removes the
-#: big write. Row-count-guarded, env-overridable: at cluster scale
-#: (m over ~2M edges) the plain shuffle join returns unchanged.
-_EDGE_BCAST_MAX_BYTES = int(_os.environ.get(
-    "SPARK_GRAFT_EDGE_BCAST_MAX_BYTES", str(128 << 20)))
-
-
-def _bcast_edges_if_small(df: "DataFrame", n_rows: int) -> "DataFrame":
-    """Broadcast-hint an edge frame when an exact count says it fits
-    ``_EDGE_BCAST_MAX_BYTES`` at ~64 bytes per (long, long) hashed row;
-    otherwise return it untouched (same result either way — the hint
-    only picks the physical join)."""
-    if int(n_rows) * 64 <= _EDGE_BCAST_MAX_BYTES:
-        return F.broadcast(df)
-    return df
 
 
 def _materialize_ctes(sql: str) -> str:
@@ -114,7 +99,11 @@ def pagerank(
     a bounded-cost approximation is the point.
 
     Runs Spark jobs when the DataFrame is built, not when the caller's
-    action runs: each iteration's rank frame is an eager checkpoint.
+    action runs: the edge and node set-up frames and every iteration
+    are checkpoints, three jobs an iteration (the ranks broadcast, the
+    aggregate's shuffle, the checkpoint, which also observes the
+    dangling mass). The caller's action runs only the final rank
+    projection.
 
     ``salt_hot_nodes`` > 0 splits each destination's contribution sum
     across that many salt buckets (two-step aggregate keyed on
@@ -129,113 +118,101 @@ def pagerank(
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
+    spark = edges.sparkSession
+    q = "`{}`".format
     # every loop-invariant frame is built ONCE and checkpointed —
-    # without this, each iteration (and each of its 2-3 references)
+    # without this, each iteration (and each of its references)
     # re-executes the caller's whole edge-derivation plan: measured
-    # 15.6 s → 4.8 s at 600k edges × 6 iterations
+    # 15.6 s → 4.8 s at 600k edges × 6 iterations. The edges carry
+    # their source's out-degree (count, or out-strength when weighted)
+    # as a window over ONE exchange: hash(src) clusters both the
+    # (src, dst) dedup and the per-src window. Under AQE a lazy
+    # checkpoint still runs the plan's shuffle map stages in the call
+    # (one job here); the final stage runs at the first action.
     if weight is None:
-        e = (
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        e2 = spark.sql(
+            f"""SELECT src, dst, count(*) OVER (PARTITION BY src) AS deg
+FROM (SELECT DISTINCT src, dst FROM (
+  SELECT {q(src)} AS src, {q(dst)} AS dst FROM {{edges}} DISTRIBUTE BY src))""",
+            edges=edges,
+        ).localCheckpoint(eager=False)
+        share = "r.rank / e.deg"
     else:
-        wc = F.col(weight).cast("double")
-        wc = F.when(
-            wc <= 0,
-            F.raise_error(F.concat(
-                F.lit("pagerank: non-positive edge weight "),
-                wc.cast("string"),
-            )).cast("double"),
-        ).otherwise(wc)
-        e = (
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
-                         wc.alias("__w"))
-            .groupBy("src", "dst").agg(F.sum("__w").alias("__w"))
-            .localCheckpoint(eager=False)
-        )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        # lazy: the count() below materializes the checkpoint anyway
-        .localCheckpoint(eager=False)
-    )
-    n = nodes.count()  # the one driver scalar
+        e2 = spark.sql(
+            f"""SELECT src, dst, __w, sum(__w) OVER (PARTITION BY src) AS deg
+FROM (SELECT src, dst, sum(__w) AS __w FROM (
+  SELECT {q(src)} AS src, {q(dst)} AS dst,
+         CASE WHEN CAST({q(weight)} AS DOUBLE) <= 0
+              THEN CAST(raise_error(concat(
+                     'pagerank: non-positive edge weight ',
+                     CAST(CAST({q(weight)} AS DOUBLE) AS STRING))) AS DOUBLE)
+              ELSE CAST({q(weight)} AS DOUBLE) END AS __w
+  FROM {{edges}} DISTRIBUTE BY src) GROUP BY src, dst)""",
+            edges=edges,
+        ).localCheckpoint(eager=False)
+        share = "r.rank * e.__w / e.deg"
+    # every node with its dangling flag (never a source) from ONE
+    # aggregate over the edge frame: each edge says "src is not
+    # dangling" and "dst may be". The node count n is observed on the
+    # checkpoint job.
+    obs = Observation()
+    nodes = spark.sql(
+        """SELECT node, false AS __m, bool_and(__i = 1) AS __dang
+FROM (SELECT posexplode(array(src, dst)) AS (__i, node) FROM {e2})
+GROUP BY node""",
+        e2=e2,
+    ).observe(obs, F.expr("count(*)").alias("n")).localCheckpoint(eager=True)
+    n = obs.get["n"]
     if n == 0:
-        return nodes.select("node").withColumn("rank", F.lit(0.0))
-    if weight is None:
-        out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    else:
-        # out-STRENGTH: rank distributes proportionally to weight
-        out_deg = e.groupBy("src").agg(F.sum("__w").alias("deg"))
-    # edges pre-joined with the (static) out-degree of their source —
-    # the per-iteration work is then a single skinny join on ranks
-    e2 = e.join(out_deg, "src").localCheckpoint(eager=False)
-    # dangling flag folded into the node frame ONCE (round-11 opt): the
-    # per-iteration dangling-mass aggregate then filters the in-memory
-    # ranks RDD instead of semi-joining a dangling_nodes frame — one
-    # join (build + probe) fewer per iteration, same addend set
-    nodes = (
-        nodes.join(out_deg, nodes.node == out_deg.src, how="left")
-        .select("node", F.col("deg").isNull().alias("__dang"))
-        .localCheckpoint(eager=False)
-    )
+        return spark.sql("SELECT node, CAST(0.0 AS DOUBLE) AS rank FROM {nodes}",
+                         nodes=nodes)
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
+    # ONE statement per round, over the previous round's checkpoint p.
+    # Its rows are (node, __m = false, __dang, __c): the contribution sum
+    # of every node, plus one __m = true row whose __c is the rank mass
+    # on dangling nodes, read back as an observed metric of the
+    # checkpoint job. A node's rank is base + damping·(__c + mass/n).
+    # One aggregate computes all of them in one pass: each edge's
+    # share, a 0.0 row per node (so every node has a row; x + 0.0 == x)
+    # and each dangling node's rank under the mass key. When n fits the
+    # bound the ranks side is broadcast into the edge join, so the edge
+    # frame never shuffles.
+    hint = "/*+ BROADCAST(r) */ " if bcast_fits(n, 96) else ""
+    msgs = f"""SELECT {hint}e.dst, false AS __m, CAST(NULL AS BOOLEAN) AS __dang,
+           {share} AS __c
+    FROM {{e2}} e JOIN r ON e.src = r.node"""
+    if salt_hot_nodes > 0:
+        # two-step sum keyed on (dst, salt-of-src), then dst
+        msgs = f"""SELECT dst, false AS __m, CAST(NULL AS BOOLEAN) AS __dang,
+           sum(__c) AS __c
+    FROM (SELECT {hint}e.dst, {share} AS __c,
+                 pmod(xxhash64(e.src), {int(salt_hot_nodes)}) AS __salt
+          FROM {{e2}} e JOIN r ON e.src = r.node)
+    GROUP BY dst, __salt"""
+    ranks = f"SELECT node, __dang, {_dlit(1.0 / n)} AS rank FROM {{p}}"
+    p = nodes
     for _ in range(int(iters)):
-        # rank mass sitting on dangling nodes, as a 1-row broadcast
-        dangling = ranks.filter("__dang").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-        )
-        joined = e2.join(ranks, e2.src == ranks.node)
-        share = (
-            F.col("rank") / F.col("deg") if weight is None
-            else F.col("rank") * F.col("__w") / F.col("deg")
-        )
-        if salt_hot_nodes > 0:
-            contribs = (
-                joined.groupBy(
-                    "dst",
-                    F.pmod(F.xxhash64("src"), F.lit(int(salt_hot_nodes)))
-                    .alias("__salt"),
-                )
-                .agg(F.sum(share).alias("__c"))
-                .groupBy("dst")
-                .agg(F.sum("__c").alias("__c"))
-            )
-        else:
-            contribs = joined.groupBy("dst").agg(
-                F.sum(share).alias("__c")
-            )
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, how="left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "__dang",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("__c"), F.lit(0.0))
-                       + F.col("__dm") / F.lit(float(n)))
-                ).alias("rank"),
-            )
-            # EAGER checkpoint (r12): the next iteration references
-            # this frame 2-3x (dangling aggregate + contrib join), and
-            # concurrent first-materialization of a LAZY checkpoint
-            # recomputes its post-exchange final stage once per
-            # reference (the louvain/betweenness lesson) — duplicated
-            # real work that serializes under load; the blocking
-            # materialization is the same join the first consumer ran
-            .localCheckpoint(eager=True)
-        )
-    if round_to is not None:
-        ranks = ranks.select("node", F.round("rank", round_to).alias("rank"))
-    else:
-        ranks = ranks.select("node", "rank")
-    return ranks
+        # EAGER (r12): the next round reads this frame three times, and
+        # concurrent first-materialization of a LAZY checkpoint
+        # recomputes its final stage once per reference (the
+        # louvain/betweenness lesson)
+        obs = Observation()
+        p = spark.sql(
+            f"""WITH r AS ({ranks})
+SELECT dst AS node, __m, max(__dang) AS __dang, sum(__c) AS __c FROM (
+  {msgs}
+  UNION ALL SELECT node, false, __dang, 0.0D FROM {{p}} WHERE NOT __m
+  UNION ALL SELECT NULL, true, NULL, rank FROM r WHERE __dang
+) GROUP BY dst, __m""",
+            e2=e2, p=p,
+        ).observe(obs, F.expr("sum(CASE WHEN __m THEN __c END)").alias("dm")
+                  ).localCheckpoint(eager=True)
+        dm = obs.get["dm"] or 0.0
+        ranks = f"""SELECT node, __dang, {_dlit((1.0 - damping) / n)}
+  + {_dlit(damping)} * (__c + {_dlit(dm)} / {_dlit(float(n))}) AS rank
+FROM {{p}} WHERE NOT __m"""
+    rank = "rank" if round_to is None else f"round(rank, {int(round_to)})"
+    return spark.sql(f"SELECT node, {rank} AS rank FROM ({ranks})", p=p)
 
 
 def pagerank_sql(
@@ -3280,10 +3257,9 @@ def clustering_coefficient(
     # broadcast the edge side when the exact count admits it, so the
     # wedge frame never shuffles (round-11 opt, guide §3.1; the count
     # materializes the checkpoint und every consumer needs anyway)
+    probe = und.select(F.col("a").alias("w1"), F.col("b").alias("w2"))
     closed = wedges.join(
-        _bcast_edges_if_small(
-            und.select(F.col("a").alias("w1"), F.col("b").alias("w2")),
-            und.count()),
+        F.broadcast(probe) if bcast_fits(und.count()) else probe,
         on=["w1", "w2"],
         how="inner",
     )

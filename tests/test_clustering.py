@@ -616,6 +616,41 @@ def test_dbscan_duckdb_parity(spark):
     assert got == oracle
 
 
+@pytest.mark.parametrize("shape", ["no_cores", "one_cluster", "empty"])
+def test_dbscan_adversarial_shapes_duckdb_parity(spark, shape):
+    """No core point (all noise), every point in one cluster, and empty
+    input, each equal to the DuckDB mirror."""
+    duckdb = pytest.importorskip("duckdb")
+    import pandas as pd
+
+    from simba_spark.operators.clustering import dbscan, dbscan_sql
+
+    if shape == "no_cores":  # 10 apart, eps 1: every ball holds itself
+        rows = [(i, 10.0 * i, 5.0 * (i % 3)) for i in range(12)]
+    elif shape == "one_cluster":  # a 6x6 grid of step 0.5, eps 0.6
+        rows = [(i, 0.5 * (i % 6), 0.5 * (i // 6)) for i in range(36)]
+    else:
+        rows = []
+    df = spark.createDataFrame(rows, "pid2 long, x double, y double")
+    eps = 1.0 if shape == "no_cores" else 0.6
+    got = sorted((r.pid2, r.role, r.cluster) for r in dbscan(
+        df, ["x", "y"], eps=eps, min_pts=3, id_col="pid2").collect())
+    con = duckdb.connect()
+    con.register("pts", pd.DataFrame(rows, columns=["pid2", "x", "y"])
+                 .astype({"pid2": "int64", "x": "float64", "y": "float64"}))
+    oracle = sorted(map(tuple, con.execute(dbscan_sql(
+        "pts", ["x", "y"], eps=eps, min_pts=3,
+        id_col="pid2")).fetchall()))
+    assert got == oracle
+    roles = {role for _, role, _ in got}
+    if shape == "no_cores":
+        assert roles == {"noise"}
+    elif shape == "one_cluster":
+        assert {c for _, _, c in got} == {0}
+    else:
+        assert got == []
+
+
 def test_dbscan_validation(spark):
     from simba_spark.operators.clustering import dbscan
 

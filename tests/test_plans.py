@@ -680,3 +680,179 @@ def test_round10_debut_plan_shapes(spark):
     # no global single-partition row window: every Window in the plan
     # is either partitioned or over the tiny per-partition offsets
     assert "CartesianProduct" not in p
+
+
+# ---------------------------------------------------------------------------
+# loop operators: one SQL statement per round, broadcast node sides
+
+
+def _loop_fixtures(spark):
+    import random
+
+    graph = spark.range(200).select(
+        (F.col("id") % 50).alias("src"),
+        ((F.col("id") * 7 + 3) % 53).alias("dst"),
+    )
+    chain = spark.createDataFrame([(i, i + 1) for i in range(16)],
+                                  "a_id long, b_id long")
+    rng = random.Random(13)
+    pts = spark.createDataFrame(
+        [(i, round(rng.uniform(0, 5), 3), round(rng.uniform(0, 5), 3))
+         for i in range(60)],
+        "pid2 long, x double, y double")
+    return graph, chain, pts
+
+
+@pytest.mark.parametrize("op,max_jobs,max_py4j", [
+    ("pagerank", 23, 290),
+    ("connected_components", 20, 270),
+    ("dbscan", 29, 1150),
+])
+def test_loop_ops_build_job_and_py4j_budgets(spark, op, max_jobs, max_py4j):
+    """Build-phase ceilings of the loop operators, just above what they
+    take with each round built as one SQL statement, the dangling mass
+    and the convergence count observed on the round's own checkpoint
+    job, and the node-sized side broadcast (21 jobs / 258 round trips,
+    18 / 242 and 26 / 1,086). Built op by op, the same calls took
+    49 jobs / 1,809 round trips (pagerank, 6 iterations), 49 / 2,854
+    (components of a 17-node chain) and 64 / 4,397 (dbscan of 60
+    points)."""
+    from simba_spark.operators.clustering import dbscan
+    from simba_spark.operators.dedup import connected_components
+    from simba_spark.operators.graph import pagerank
+
+    graph, chain, pts = _loop_fixtures(spark)
+    build = {
+        "pagerank": lambda: pagerank(graph, iters=6),
+        "connected_components": lambda: connected_components(chain),
+        "dbscan": lambda: dbscan(pts, ["x", "y"], eps=0.7, min_pts=3,
+                                 id_col="pid2"),
+    }[op]
+    cost = _cost(spark, build)
+    assert cost.jobs <= max_jobs, cost.jobs
+    assert cost.py4j_calls <= max_py4j, cost.py4j_calls
+
+
+class _CheckpointPlans:
+    """Executed plans of every frame an operator checkpoints (the final
+    adaptive plan once it has run)."""
+
+    def __init__(self, monkeypatch):
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        self.plans = []
+        orig = DataFrame.localCheckpoint
+
+        def capture(df, eager=True, storageLevel=None):
+            out = orig(df, eager)
+            self.plans.append(_plan(df).split("== Initial Plan ==")[0])
+            return out
+
+        monkeypatch.setattr(DataFrame, "localCheckpoint", capture)
+
+
+def _components_mirror(pairs, a_col="a_id", b_col="b_id"):
+    """DuckDB recursive-CTE components: min id reachable, per id."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE p (a BIGINT, b BIGINT)")
+    rows = [(r[a_col], r[b_col]) for r in pairs.collect()]
+    if rows:
+        con.executemany("INSERT INTO p VALUES (?, ?)", rows)
+    return dict(con.execute("""
+        WITH RECURSIVE e AS (SELECT a AS src, b AS dst FROM p
+                             UNION SELECT b, a FROM p),
+        reach(id, r) AS (SELECT DISTINCT src, src FROM e
+                         UNION SELECT e.src, reach.r FROM e
+                         JOIN reach ON e.dst = reach.id)
+        SELECT id, min(r) FROM reach GROUP BY id""").fetchall())
+
+
+@pytest.mark.parametrize("bound", ["default", 0])
+def test_loop_ops_broadcast_guard_both_sides(spark, monkeypatch, request,
+                                            bound):
+    """Both sides of the node-side broadcast guard give the oracle's
+    answer. With the default bound a round streams the checkpointed
+    edges through a broadcast of the ranks (labels): the edge scan is
+    never exchanged. With the bound at 0 no hint is written and the
+    edge side is shuffled into the join. The benchmark has no workload
+    above the bound, so this is that side's only coverage."""
+    duckdb = pytest.importorskip("duckdb")
+    from simba_spark.operators import _bcast
+    from simba_spark.operators.dedup import connected_components
+    from simba_spark.operators.graph import pagerank, pagerank_sql
+
+    if bound == 0:
+        monkeypatch.setattr(_bcast, "_EDGE_BCAST_MAX_BYTES", 0)
+        # and no size-based broadcast either (the fixture's edge side
+        # is small enough for one): the joins must shuffle
+        for key in ("spark.sql.autoBroadcastJoinThreshold",
+                    "spark.sql.adaptive.autoBroadcastJoinThreshold"):
+            old = spark.conf.get(key, None)
+            spark.conf.set(key, "-1")
+            request.addfinalizer(
+                lambda k=key, v=old: spark.conf.unset(k) if v is None
+                else spark.conf.set(k, v))
+    graph, chain, _ = _loop_fixtures(spark)
+    rows = [(r.src, r.dst, float(1 + (r.src + r.dst) % 4))
+            for r in graph.collect()]
+    weighted = spark.createDataFrame(rows, "src long, dst long, w double")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (src BIGINT, dst BIGINT, w DOUBLE)")
+    con.executemany("INSERT INTO e VALUES (?, ?, ?)", rows)
+
+    plans = _CheckpointPlans(monkeypatch)
+    want = dict(con.execute(pagerank_sql("e", iters=6)).fetchall())
+    got = {r.node: r.rank for r in pagerank(graph, iters=6).collect()}
+    assert got == want
+    assert {r.node: r.rank for r in pagerank(
+        graph, iters=6, salt_hot_nodes=4).collect()} == want
+    want_w = dict(con.execute(
+        pagerank_sql("e", iters=6, weight="w")).fetchall())
+    assert {r.node: r.rank for r in pagerank(
+        weighted, iters=6, weight="w").collect()} == want_w
+
+    two = chain.unionByName(spark.createDataFrame(
+        [(100, 101), (101, 102), (102, 100), (7, 7)],
+        "a_id long, b_id long"))
+    got = {r.id: r.component for r in connected_components(two).collect()}
+    assert got == _components_mirror(two)
+    assert got[16] == 0 and got[102] == 100 and got[7] == 0
+
+    # the rounds: the edge scan feeds the ranks (labels) join directly
+    # under the hint, and through an exchange on the join key without it
+    pr_rounds = [p for p in plans.plans if "max(__dang" in p]
+    cc_rounds = [p for p in plans.plans if "min(__cand" in p]
+    assert len(pr_rounds) >= 3 * 4 and len(cc_rounds) >= 3
+    edge_shuffled = (
+        ["Exchange hashpartitioning(src" in p for p in pr_rounds]
+        + ["Exchange hashpartitioning(dst" in p for p in cc_rounds])
+    if bound == 0:
+        assert all(edge_shuffled)
+        assert not any("BroadcastHashJoin" in p for p in pr_rounds + cc_rounds)
+    else:
+        assert not any(edge_shuffled)
+
+
+def test_components_round_plan_shape(spark, monkeypatch):
+    """A components round after round 0, at sf0.1 scale (4,000 ids),
+    plans ONE exchange, the aggregate's hashpartitioning(id): the edge
+    checkpoint streams through the labels broadcast, which the
+    label-of-label lookup reuses. No repartition(id) exchange closes
+    the round: the aggregate's output already is hash(id), and a
+    checkpoint scan does not carry partitioning into the next round."""
+    from simba_spark.operators.dedup import connected_components
+
+    # 80 chains of 50 nodes
+    pairs = spark.range(4000).filter(F.col("id") % 50 != 49).select(
+        F.col("id").alias("a_id"), (F.col("id") + 1).alias("b_id"))
+    plans = _CheckpointPlans(monkeypatch)
+    connected_components(pairs)
+    rounds = [p for p in plans.plans if "min(__cand" in p]
+    assert len(rounds) >= 2
+    for p in rounds:
+        assert p.count("Exchange hashpartitioning(") == 1, p
+        assert "Exchange hashpartitioning(id" in p
+        assert "REPARTITION_BY_COL" not in p
+        assert "ReusedExchange" in p  # one labels broadcast, two probes

@@ -167,6 +167,40 @@ def test_pagerank_matches_duckdb_oracle(spark):
     assert got == want
 
 
+_PR_SHAPES = {
+    "empty": [],
+    "lone_self_loop": [(1, 1)],
+    "duplicate_and_reversed": [(1, 2), (1, 2), (2, 1), (2, 3), (3, 2),
+                               (3, 2), (3, 4)],
+    "star_hub": [(0, i) for i in range(1, 13)]
+    + [(i, 0) for i in range(13, 21)],
+    "triangle_and_isolated_self_loop": [(1, 2), (2, 3), (3, 1), (9, 9)],
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_PR_SHAPES))
+def test_pagerank_adversarial_shapes_match_duckdb(spark, shape):
+    """Structural edge cases dense random fixtures miss, unweighted and
+    weighted, bit-equal to the unrolled DuckDB oracle."""
+    duckdb = pytest.importorskip("duckdb")
+    from simba_spark.operators.graph import pagerank, pagerank_sql
+
+    rows = [(s, d, float(1 + (s + d) % 3)) for s, d in _PR_SHAPES[shape]]
+    df = spark.createDataFrame(rows, "src long, dst long, w double")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (src BIGINT, dst BIGINT, w DOUBLE)")
+    if rows:
+        con.executemany("INSERT INTO e VALUES (?, ?, ?)", rows)
+    for weight in (None, "w"):
+        got = {r["node"]: r["rank"]
+               for r in pagerank(df, iters=6, weight=weight).collect()}
+        want = dict(con.execute(
+            pagerank_sql("e", iters=6, weight=weight)).fetchall())
+        assert got == want, weight
+        if rows:
+            assert sum(got.values()) == pytest.approx(1.0, abs=1e-4)
+
+
 def test_pagerank_dangling_mass_conserved(spark):
     from simba_spark.operators.graph import pagerank
 
