@@ -3398,25 +3398,6 @@ def q_bpe_fertility(spark, sf_dir):
     return bpe_fertility(docs, merges)
 
 
-def _trade_louvain1(spark, sf_dir):
-    """The Louvain level-1 assignment (iters=4) over the trade graph —
-    `q_louvain` returns it and `q_louvain_levels` injects it as the
-    first level of the multi-level pipeline (graph.louvain's
-    ``level1=`` seam). Computed FRESH per call: the round-11 build
-    session's (session, sf_dir) memo let bench reps of BOTH queries
-    reuse one materialized assignment instead of computing from
-    parquet, which the optimization round's no-cross-run-caching rule
-    forbids. The ``level1=`` parameter stays a library feature for
-    callers that legitimately hold a precomputed assignment."""
-    from simba_spark.operators.graph import louvain_moves
-
-    # no trailing checkpoint: q_louvain's sink is the single consumer,
-    # and louvain_moves' output is already a checkpoint + projection
-    # (the old extra checkpoint paid one full AQE materialization of
-    # the output frame per call — session-7)
-    return louvain_moves(_trade_edges(spark, sf_dir), iters=4)
-
-
 def q_louvain(spark, sf_dir):
     """Deterministic synchronous Louvain move phase (operators.graph.
     louvain_moves): modularity-GAIN community moves over the trade
@@ -3424,7 +3405,9 @@ def q_louvain(spark, sf_dir):
     parallel-Louvain anti-swap discipline), strict-positive-gain
     acceptance, smallest-community tie-break — beats label_prop's
     plurality rule on Newman modularity (asserted in tests)."""
-    return _trade_louvain1(spark, sf_dir)
+    from simba_spark.operators.graph import louvain_moves
+
+    return louvain_moves(_trade_edges(spark, sf_dir), iters=4)
 
 
 def q_louvain_levels(spark, sf_dir):
@@ -3435,14 +3418,8 @@ def q_louvain_levels(spark, sf_dir):
     best level by an EXACT integer modularity score (4m·W_in − Σd_c²,
     HUGEINT/decimal both engines), so Q >= the one-level q_louvain row
     by construction. Level 2 runs on the contracted graph — one node
-    per level-1 community. Level 1 is computed INSIDE ``louvain`` (the
-    weighted kernel at w=1 — bit-identical to the injected
-    louvain_moves form, asserted in tests): the round-9 ``level1=``
-    injection existed to share one materialized assignment with
-    q_louvain across bench reps, which the no-cross-run-caching rule
-    removed; without the sharing it only cost a SECOND _trade_edges
-    materialization plus a duplicate symmetric-adjacency build
-    (~2-3 s at sf0.1) on top of the in-operator level 1."""
+    per level-1 community. Level 1 is the q_louvain row's move phase
+    (the weighted kernel at w=1)."""
     from simba_spark.operators.graph import louvain
 
     return louvain(_trade_edges(spark, sf_dir), iters=4, levels=2)
@@ -4101,7 +4078,8 @@ def q_personalized_pagerank(spark, sf_dir):
     TrustRank-style proximity to the customers whose key is a multiple
     of 100, over the directed trade graph (6 iterations, teleport +
     dangling mass returning to the seeds, unreachable nodes exactly
-    0). Same per-iteration join+groupBy shape as pagerank."""
+    0). Runs pagerank's rounds, with the teleport flag on the seeds
+    only."""
     from simba_spark.operators.graph import personalized_pagerank
 
     edges = _trade_edges(spark, sf_dir)

@@ -41,17 +41,9 @@ from ..functions import _dlit
 from ._bcast import bcast_fits
 
 
-#: HyperBall broadcast-form guard: the wide register table (one row of
-#: 8 B node id + 4·2^p B int registers per node) broadcasts only while
-#: its estimated size stays under this many bytes (p=6: ~480k nodes at
-#: the 128 MB default). Env-overridable so a cluster deployment with
-#: more executor/driver headroom can raise it; past the guard the
-#: shuffle forms take over, so the bound only picks a physical plan,
-#: never changes a result.
-import os as _os
-
-_HB_BCAST_MAX_BYTES = int(_os.environ.get(
-    "SPARK_GRAFT_HB_BCAST_MAX_BYTES", str(128 << 20)))
+#: HyperBall ``layout='auto'`` past the broadcast guard: the rows layout
+#: below this many distinct edges, the wide layout from it on.
+_HB_WIDE_MIN_EDGES = 2_000_000
 
 
 def _materialize_ctes(sql: str) -> str:
@@ -116,6 +108,28 @@ def pagerank(
     (identical after the final rounding — equivalence-tested on a hub
     graph); 0 keeps the single-step aggregate.
     """
+    return _rank_rounds(edges, src, dst, damping, iters, round_to,
+                        salt_hot_nodes, weight)
+
+
+def _rank_rounds(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    damping: float,
+    iters: int,
+    round_to: Optional[int],
+    salt_hot_nodes: int = 0,
+    weight: Optional[str] = None,
+    seeds: Optional[DataFrame] = None,
+    node: str = "node",
+) -> DataFrame:
+    """The rank loop of :func:`pagerank` and :func:`personalized_pagerank`.
+    Every node carries a 0/1 teleport flag ``__tp``: 1 on every node
+    when ``seeds`` is None, else 1 only on the nodes in ``seeds[node]``.
+    Teleport and dangling mass go to the flagged nodes, s of them; with
+    every node flagged (s == n) the rounds are plain PageRank, bit for
+    bit (``x * 1`` is exact)."""
     if iters < 1:
         raise ValueError("iters must be >= 1")
     spark = edges.sparkSession
@@ -151,45 +165,55 @@ FROM (SELECT src, dst, sum(__w) AS __w FROM (
             edges=edges,
         ).localCheckpoint(eager=False)
         share = "r.rank * e.__w / e.deg"
-    # every node with its dangling flag (never a source) from ONE
-    # aggregate over the edge frame: each edge says "src is not
-    # dangling" and "dst may be". The node count n is observed on the
+    # every node with its dangling flag (never a source) and its
+    # teleport flag from ONE aggregate over the edge frame: each edge
+    # says "src is not dangling" and "dst may be"; a seed row (__i = 2)
+    # flags its node but adds none (HAVING keeps graph nodes only). The
+    # node count n and the flagged count s are observed on the
     # checkpoint job.
+    seed_rows = "" if seeds is None else (
+        f"UNION ALL SELECT 2, {q(node)}, 1 FROM {{seeds}}")
     obs = Observation()
     nodes = spark.sql(
-        """SELECT node, false AS __m, bool_and(__i = 1) AS __dang
-FROM (SELECT posexplode(array(src, dst)) AS (__i, node) FROM {e2})
-GROUP BY node""",
-        e2=e2,
-    ).observe(obs, F.expr("count(*)").alias("n")).localCheckpoint(eager=True)
-    n = obs.get["n"]
-    if n == 0:
+        f"""SELECT node, false AS __m, bool_and(__i <> 0) AS __dang,
+       max(__s) AS __tp
+FROM (SELECT __i, node, {int(seeds is None)} AS __s
+      FROM (SELECT posexplode(array(src, dst)) AS (__i, node) FROM {{e2}})
+      {seed_rows})
+GROUP BY node HAVING min(__i) < 2""",
+        e2=e2, seeds=seeds,
+    ).observe(obs, F.expr("count(*) AS n"), F.expr("sum(__tp) AS s")
+              ).localCheckpoint(eager=True)
+    n, s = obs.get["n"], obs.get["s"] or 0
+    if s == 0:
+        if seeds is not None:
+            raise ValueError("no seed appears in the graph")
         return spark.sql("SELECT node, CAST(0.0 AS DOUBLE) AS rank FROM {nodes}",
                          nodes=nodes)
 
     # ONE statement per round, over the previous round's checkpoint p.
-    # Its rows are (node, __m = false, __dang, __c): the contribution sum
-    # of every node, plus one __m = true row whose __c is the rank mass
-    # on dangling nodes, read back as an observed metric of the
-    # checkpoint job. A node's rank is base + damping·(__c + mass/n).
-    # One aggregate computes all of them in one pass: each edge's
-    # share, a 0.0 row per node (so every node has a row; x + 0.0 == x)
-    # and each dangling node's rank under the mass key. When n fits the
-    # bound the ranks side is broadcast into the edge join, so the edge
-    # frame never shuffles.
+    # Its rows are (node, __m = false, __dang, __tp, __c): the
+    # contribution sum of every node, plus one __m = true row whose __c
+    # is the rank mass on dangling nodes, read back as an observed
+    # metric of the checkpoint job. A node's rank is
+    # base·__tp + damping·(__c + mass/s·__tp). One aggregate computes
+    # all of them in one pass: each edge's share, a 0.0 row per node (so
+    # every node has a row; x + 0.0 == x) and each dangling node's rank
+    # under the mass key. When n fits the bound the ranks side is
+    # broadcast into the edge join, so the edge frame never shuffles.
     hint = "/*+ BROADCAST(r) */ " if bcast_fits(n, 96) else ""
-    msgs = f"""SELECT {hint}e.dst, false AS __m, CAST(NULL AS BOOLEAN) AS __dang,
-           {share} AS __c
+    nul = "CAST(NULL AS BOOLEAN) AS __dang, CAST(NULL AS INT) AS __tp"
+    msgs = f"""SELECT {hint}e.dst, false AS __m, {nul}, {share} AS __c
     FROM {{e2}} e JOIN r ON e.src = r.node"""
     if salt_hot_nodes > 0:
         # two-step sum keyed on (dst, salt-of-src), then dst
-        msgs = f"""SELECT dst, false AS __m, CAST(NULL AS BOOLEAN) AS __dang,
-           sum(__c) AS __c
+        msgs = f"""SELECT dst, false AS __m, {nul}, sum(__c) AS __c
     FROM (SELECT {hint}e.dst, {share} AS __c,
                  pmod(xxhash64(e.src), {int(salt_hot_nodes)}) AS __salt
           FROM {{e2}} e JOIN r ON e.src = r.node)
     GROUP BY dst, __salt"""
-    ranks = f"SELECT node, __dang, {_dlit(1.0 / n)} AS rank FROM {{p}}"
+    ranks = (f"SELECT node, __dang, __tp, {_dlit(1.0 / s)} * __tp AS rank"
+             " FROM {p}")
     p = nodes
     for _ in range(int(iters)):
         # EAGER (r12): the next round reads this frame three times, and
@@ -199,17 +223,18 @@ GROUP BY node""",
         obs = Observation()
         p = spark.sql(
             f"""WITH r AS ({ranks})
-SELECT dst AS node, __m, max(__dang) AS __dang, sum(__c) AS __c FROM (
+SELECT dst AS node, __m, max(__dang) AS __dang, max(__tp) AS __tp,
+       sum(__c) AS __c FROM (
   {msgs}
-  UNION ALL SELECT node, false, __dang, 0.0D FROM {{p}} WHERE NOT __m
-  UNION ALL SELECT NULL, true, NULL, rank FROM r WHERE __dang
+  UNION ALL SELECT node, false, __dang, __tp, 0.0D FROM {{p}} WHERE NOT __m
+  UNION ALL SELECT NULL, true, NULL, NULL, rank FROM r WHERE __dang
 ) GROUP BY dst, __m""",
             e2=e2, p=p,
-        ).observe(obs, F.expr("sum(CASE WHEN __m THEN __c END)").alias("dm")
+        ).observe(obs, F.expr("sum(CASE WHEN __m THEN __c END) AS dm")
                   ).localCheckpoint(eager=True)
         dm = obs.get["dm"] or 0.0
-        ranks = f"""SELECT node, __dang, {_dlit((1.0 - damping) / n)}
-  + {_dlit(damping)} * (__c + {_dlit(dm)} / {_dlit(float(n))}) AS rank
+        ranks = f"""SELECT node, __dang, __tp, {_dlit((1.0 - damping) / s)} * __tp
+  + {_dlit(damping)} * (__c + {_dlit(dm)} / {_dlit(float(s))} * __tp) AS rank
 FROM {{p}} WHERE NOT __m"""
     rank = "rank" if round_to is None else f"round(rank, {int(round_to)})"
     return spark.sql(f"SELECT node, {rank} AS rank FROM ({ranks})", p=p)
@@ -825,76 +850,16 @@ def personalized_pagerank(
     Dangling mass also returns to the seeds, so total rank stays 1 and
     unreachable nodes get exactly 0.
 
-    Same per-iteration shape as :func:`pagerank` (one edge⋈rank join +
-    one skinny groupBy + a 1-row dangling broadcast, lazily
-    checkpointed); the seed flag is a left-semi-derived 0/1 column
-    joined once up front. Driver state: the seed count (one scalar).
+    The rounds are :func:`pagerank`'s (one SQL statement per round,
+    ranks broadcast when the node count fits the guard, dangling mass
+    observed on the round's checkpoint job), with the teleport flag set
+    on the seeds only; the seed count is observed on the node frame's
+    checkpoint job. With every node as a seed the ranks equal
+    :func:`pagerank`'s bit for bit. Raises when no seed appears in the
+    graph.
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    sd = seeds.select(F.col(node).alias("node")).distinct()
-    nodes = (
-        nodes.join(sd.withColumn("__is_seed", F.lit(1)), "node", "left")
-        .select("node", F.coalesce("__is_seed", F.lit(0)).alias("__is_seed"))
-        .localCheckpoint(eager=False)
-    )
-    s = nodes.filter("__is_seed = 1").count()  # the one driver scalar
-    if s == 0:
-        raise ValueError("no seed appears in the graph")
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    e2 = e.join(out_deg, "src").localCheckpoint(eager=False)
-    # dangling flag folded into the node frame once (round-11 opt, same
-    # move as pagerank): the per-iteration mass aggregate filters the
-    # in-memory ranks RDD instead of semi-joining a dangling_nodes frame
-    nodes = (
-        nodes.join(out_deg, nodes.node == out_deg.src, how="left")
-        .select("node", "__is_seed", F.col("deg").isNull().alias("__dang"))
-        .localCheckpoint(eager=False)
-    )
-
-    ranks = nodes.withColumn(
-        "rank",
-        F.when(F.col("__is_seed") == 1, F.lit(1.0 / s)).otherwise(F.lit(0.0)),
-    ).select("node", "__dang", "rank")
-    base = (1.0 - damping) / s
-    for _ in range(int(iters)):
-        dangling = ranks.filter("__dang").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-        )
-        contribs = (
-            e2.join(ranks, e2.src == ranks.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("__c"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, how="left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "__dang",
-                (
-                    F.col("__is_seed")
-                    * (F.lit(base) + F.lit(damping) * F.col("__dm") / F.lit(float(s)))
-                    + F.lit(damping) * F.coalesce(F.col("__c"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)  # r12: 2 refs next iter (see pagerank)
-        )
-    if round_to is not None:
-        ranks = ranks.select("node", F.round("rank", round_to).alias("rank"))
-    else:
-        ranks = ranks.select("node", "rank")
-    return ranks
+    return _rank_rounds(edges, src, dst, damping, iters, round_to,
+                        seeds=seeds, node=node)
 
 
 def personalized_pagerank_sql(
@@ -1741,108 +1706,17 @@ def louvain_moves(
     fixed ``iters`` cap bounds). Returns ``(node, community)``; score
     a labeling with :func:`modularity`.
 
-    Scale: the assignment frame carries ``__deg`` so Σtot is a
-    node-scale aggregate with NO join and the per-round chain is
-    exactly three equi-joins — und⋈comm on the neighbor key (the
-    edge frame is pre-partitioned on that key once, so only the
-    node-scale side shuffles each round), cand⋈tot on the candidate
-    community, then ⋈comm on the node id, whose exchange the final
-    ``min_by`` argmax reuses (groupBy on the join key — no extra
-    shuffle). 2m is a 1-row broadcast (in-plan, not collected). No
-    cartesian.
+    This is :func:`louvain` at ``levels=1``: its weighted move kernel
+    with every edge weight 1 (see :func:`_louvain_weighted_moves` for
+    the per-round joins). 2m is collected once and planned as a
+    literal.
 
     Runs Spark jobs when the DataFrame is built, not when the caller's
-    action runs: the initial and per-round assignments are eager
-    checkpoints (lazy ones, referenced several times per round, raced
-    under concurrent AQE futures).
+    action runs: the 2m collect and the initial and per-round
+    assignments (eager checkpoints: lazy ones, referenced several times
+    per round, raced under concurrent AQE futures).
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-    )
-    und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .repartition("b")
-        .localCheckpoint(eager=False)
-    )
-    from .pipeline import _unit_hash
-
-    two_m = und.agg(F.count(F.lit(1)).alias("__2m"))
-    comm = und.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).alias("__deg")
-    ).select(
-        "node", F.col("node").alias("community"), "__deg"
-    ).localCheckpoint(eager=True)
-    for r in range(int(iters)):
-        tot = comm.groupBy("community").agg(F.sum("__deg").alias("__tot"))
-        # k_{i,C} and the own-community candidate in ONE aggregation:
-        # edge rows contribute 1 per neighbor in C, the union'd own-row
-        # contributes 0, so sum(__k) == the old count-then-max chain
-        # (exact integer arithmetic — bit-identical). The explicit
-        # repartition("node") makes every downstream step of the round
-        # reuse hash(node): the (node, __c) groupBy is satisfied by it
-        # (subset clustering), tot/comm join broadcast, and the final
-        # argmax groupBy(node) needs no exchange — ONE shuffle per
-        # round where the count/max/argmax chain took three.
-        cand = (
-            und.join(comm.select(F.col("node").alias("b"),
-                                 F.col("community").alias("__c")), "b")
-            .select(F.col("a").alias("node"), "__c",
-                    F.lit(1).cast("long").alias("__k"))
-            .unionByName(
-                comm.select("node", F.col("community").alias("__c"),
-                            F.lit(0).cast("long").alias("__k")))
-            .repartition("node")
-            .groupBy("node", "__c").agg(F.sum("__k").alias("__k"))
-        )
-        scored = (
-            cand.join(tot.select(F.col("community").alias("__c"), "__tot"),
-                      "__c")
-            .join(comm, "node")
-            .crossJoin(F.broadcast(two_m))
-        )
-        adj = F.when(
-            F.col("__c") == F.col("community"), F.col("__deg")
-        ).otherwise(F.lit(0).cast("long"))
-        score = (
-            F.col("__k").cast("double")
-            - F.col("__deg").cast("double")
-            * (F.col("__tot") - adj).cast("double")
-            / F.col("__2m").cast("double")
-        )
-        best = (
-            scored.select("node", "community", "__deg", "__c",
-                          score.alias("__s"))
-            .groupBy("node")
-            .agg(
-                F.first("community").alias("community"),
-                F.first("__deg").alias("__deg"),
-                F.min_by(
-                    "__c",
-                    F.struct((-F.col("__s")).alias("__o"), F.col("__c")),
-                ).alias("__best"),
-                F.max(F.when(F.col("__c") != F.col("community"),
-                             F.col("__s"))).alias("__sbest"),
-                F.max(F.when(F.col("__c") == F.col("community"),
-                             F.col("__s"))).alias("__scur"),
-            )
-        )
-        # one hash-bucket of nodes moves per round (the parallel-Louvain
-        # anti-swap discipline), and only on STRICTLY positive gain vs
-        # staying — frozen nodes keep the target communities stable, so
-        # each accepted move improves Q against the current assignment
-        may_move = ((_unit_hash("node", 7) < 0.5) == F.lit(r % 2 == 0))
-        gain = F.col("__sbest") > F.col("__scur")
-        comm = best.select(
-            "node",
-            F.when(may_move & gain, F.col("__best"))
-            .otherwise(F.col("community")).alias("community"),
-            "__deg",
-        ).localCheckpoint(eager=True)
-    return comm.select("node", "community")
+    return louvain(edges, src, dst, iters=iters, levels=1)
 
 
 def louvain_moves_sql(
@@ -1937,9 +1811,10 @@ def _louvain_weighted_moves(ew, nodes_deg, two_m: int, iters: int,
     universe (an all-internal super-node has no ``ew`` rows but still
     holds degree mass), and ``two_m`` the exact integer 2m (a plan
     literal — the former 1-row crossJoin(broadcast) frame cost a
-    cw-scan aggregate + broadcast-exchange pair per round). Same
-    schedule, tie-break, and gain expression as :func:`louvain_moves`
-    (which is this kernel at w=1). ``pre_checkpointed`` says the
+    cw-scan aggregate + broadcast-exchange pair per round). The
+    schedule, tie-break and gain expression are the ones
+    :func:`louvain_moves` documents (it is this kernel at w=1).
+    ``pre_checkpointed`` says the
     caller already checkpointed ``nodes_deg`` (so the init assignment
     is a projection of truncated lineage and needs no checkpoint of
     its own). Returns ``(node, community, __deg)``."""
@@ -1952,10 +1827,13 @@ def _louvain_weighted_moves(ew, nodes_deg, two_m: int, iters: int,
         comm = comm.localCheckpoint(eager=True)
     for r in range(int(iters)):
         tot = comm.groupBy("community").agg(F.sum("__deg").alias("__tot"))
-        # fused k_{i,C} + own-community candidate, one hash(node)
-        # shuffle per round — the louvain_moves rewrite at w != 1
-        # (sum(w) replaces the edge count; the own-row contributes 0,
-        # so sum == the old sum-then-max chain, exact integers)
+        # k_{i,C} and the own-community candidate in ONE aggregation:
+        # edge rows contribute w per neighbor in C, the union'd own-row
+        # contributes 0 (exact integers). The explicit
+        # repartition("node") makes every downstream step of the round
+        # reuse hash(node): the (node, __c) groupBy is satisfied by it,
+        # tot/comm join broadcast, and the final argmax groupBy(node)
+        # needs no exchange — one shuffle per round.
         cand = (
             ew.join(comm.select(F.col("node").alias("b"),
                                 F.col("community").alias("__c")), "b")
@@ -1997,6 +1875,10 @@ def _louvain_weighted_moves(ew, nodes_deg, two_m: int, iters: int,
                              F.col("__s"))).alias("__scur"),
             )
         )
+        # one hash-bucket of nodes moves per round (the parallel-Louvain
+        # anti-swap discipline), and only on STRICTLY positive gain vs
+        # staying — frozen nodes keep the target communities stable, so
+        # each accepted move improves Q against the current assignment
         may_move = ((_unit_hash("node", 7) < 0.5) == F.lit(r % 2 == 0))
         gain = F.col("__sbest") > F.col("__scur")
         comm = best.select(
@@ -2014,7 +1896,6 @@ def louvain(
     dst: str = "dst",
     iters: int = 4,
     levels: int = 2,
-    level1: Optional[DataFrame] = None,
 ) -> DataFrame:
     """FULL multi-level Louvain (Blondel et al. 2008's aggregation
     pipeline, the part :func:`louvain_moves` is one phase of): run the
@@ -2023,8 +1904,7 @@ def louvain(
     internal edges become self mass that stays in the super-node's
     degree — and re-run the moves on the weighted community graph;
     the final assignment maps every original node through all
-    ``levels``. ``levels=1`` is exactly :func:`louvain_moves` (the
-    w=1 case of the same kernel, asserted in tests).
+    ``levels``. ``levels=1`` is :func:`louvain_moves`.
 
     SYNCHRONOUS moves can regress Q on a level (same-bucket movers
     score against stale community masses — the classic synchronous-
@@ -2050,14 +1930,6 @@ def louvain(
     Runs Spark jobs when the DataFrame is built, not when the caller's
     action runs: the 2m collect and the eager per-level and per-round
     checkpoints all fire during the call.
-
-    ``level1`` injects a PRECOMPUTED level-1 assignment (a ``(node,
-    community)`` frame from :func:`louvain_moves` on the SAME edges
-    with the same ``iters``) so a session that runs both the one-level
-    kernel and the multi-level pipeline pays the dominant level-1
-    rounds ONCE (the shared-HyperBall-pass shape). The caller owns the
-    equivalence contract — an assignment from different parameters
-    silently becomes the level the contraction coarsens.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -2126,12 +1998,9 @@ def louvain(
                          ).alias("__deg"))
             ).localCheckpoint(eager=True)
             pre_ckpt = True
-        if lvl == 0 and level1 is not None:
-            cm = level1.select("node", "community")
-        else:
-            cm = _louvain_weighted_moves(
-                sym, nodes_deg, two_m, iters,
-                pre_checkpointed=pre_ckpt).select("node", "community")
+        cm = _louvain_weighted_moves(
+            sym, nodes_deg, two_m, iters,
+            pre_checkpointed=pre_ckpt).select("node", "community")
         if mapping is None:
             # cm is already a checkpoint (+projection) from the move
             # kernel — re-checkpointing it bought one extra AQE cycle.
@@ -2597,7 +2466,6 @@ def hyperanf(
     seed: int = 42,
     round_to: int = 4,
     layout: str = "auto",
-    wide_min_edges: int = 2_000_000,
 ) -> DataFrame:
     """HyperANF (Boldi–Rosa–Vigna, WWW'11): the approximate
     neighborhood function N(t) = Σ_v |{w : dist(v → w) <= t}| for
@@ -2634,19 +2502,20 @@ def hyperanf(
       per-round fixed codegen cost — ~2.3 s faster at sf0.1 on the
       trade graph, and the only layout available for p > 8.
     - ``layout='auto'`` (default): rows when p > 8; else wide whenever
-      the register table fits the broadcast guard (below), falling
-      back to the rows/wide ``wide_min_edges`` split (one count of the
-      edge frame that the loop re-reads ``iters`` times anyway — the
-      checkpoint materializes either way) only past it.
+      the register table fits the broadcast guard (below); past the
+      guard, rows below 2,000,000 distinct edges and wide from there
+      (one count of the edge frame that the loop re-reads ``iters``
+      times anyway — the checkpoint materializes either way).
 
     The wide layout additionally has a BROADCAST form, taken whenever
-    |V|·(8 + 4·2^p) bytes fits ``SPARK_GRAFT_HB_BCAST_MAX_BYTES``
-    (default 128 MB): self-loop edges fold the self-merge union into
-    the join and the edge frame is hash-partitioned by source once, so
-    each round is ONE BroadcastHashJoin + ONE exchange-free
-    max-aggregate — zero shuffles in the loop (the shuffle forms moved
-    75-92 MB per round at sf0.1). Register trajectories are
-    bit-identical across all three physical forms.
+    |V| rows of 8 + 4·2^p bytes fit the shared loop-operator guard
+    (``_bcast.bcast_fits``, 128 MB by default): self-loop edges fold
+    the self-merge union into the join and the edge frame is
+    hash-partitioned by source once, so each round is ONE
+    BroadcastHashJoin + ONE exchange-free max-aggregate — zero
+    shuffles in the loop (the shuffle forms moved 75-92 MB per round
+    at sf0.1). Register trajectories are bit-identical across all
+    three physical forms.
 
     Per round, any form: ONE edges⋈state equi-join + ONE
     max-aggregate on the same node key, localCheckpoint'd; no driver
@@ -2654,7 +2523,7 @@ def hyperanf(
     """
     sketches = hyperball_sketches(
         edges, src=src, dst=dst, iters=iters, p=p, seed=seed,
-        layout=layout, wide_min_edges=wide_min_edges)
+        layout=layout)
     return hyperball_nf(sketches, p=p, round_to=round_to)
 
 
@@ -2666,7 +2535,6 @@ def hyperball_sketches(
     p: int = 6,
     seed: int = 42,
     layout: str = "auto",
-    wide_min_edges: int = 2_000_000,
     assume_distinct: bool = False,
 ):
     """The shared HyperBall register trajectory — the ONE expensive
@@ -2729,10 +2597,10 @@ def hyperball_sketches(
             # the edge count — a second blocking driver job in a
             # sequential-latency-bound build — is never needed
             n_nodes = nodes.count()
-            if n_nodes * (8 + 4 * m) <= int(_HB_BCAST_MAX_BYTES):
+            if bcast_fits(n_nodes, 8 + 4 * m):
                 layout = "wide"
             else:
-                layout = "rows" if e.count() < int(wide_min_edges) \
+                layout = "rows" if e.count() < _HB_WIDE_MIN_EDGES \
                     else "wide"
     bucket, rho = hll_register_cols("node", seed, p)
     frames = []
@@ -2760,7 +2628,7 @@ def hyperball_sketches(
     )
     if n_nodes is None:
         n_nodes = nodes.count()
-    if n_nodes * (8 + 4 * m) <= int(_HB_BCAST_MAX_BYTES):
+    if bcast_fits(n_nodes, 8 + 4 * m):
         # BROADCAST form of the wide layout: the whole per-node
         # register table fits executor memory, so each round becomes
         # one BroadcastHashJoin + one exchange-free max-aggregate.

@@ -115,11 +115,16 @@ def test_hyperanf_matches_sql_mirror(spark):
     assert got == want
 
 
-def test_hyperanf_layouts_bit_identical(spark):
+def test_hyperanf_layouts_bit_identical(spark, monkeypatch):
     """The wide (register-column) and rows (register-row) layouts are
     two physical forms of one logical program — estimates must match
-    bit-for-bit (register values are exact powers of two in double)."""
-    from simba_spark.operators.graph import hyperanf
+    bit-for-bit (register values are exact powers of two in double).
+    The wide layout is checked in both its broadcast form and, with the
+    broadcast guard's bound at 0, its shuffle form."""
+    import duckdb
+
+    from simba_spark.operators import _bcast
+    from simba_spark.operators.graph import hyperanf, hyperanf_sql
 
     rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 1), (2, 5)]
     e = spark.createDataFrame(rows, "src long, dst long")
@@ -128,6 +133,17 @@ def test_hyperanf_layouts_bit_identical(spark):
     rowsf = {(r["t"], r["nf"])
              for r in hyperanf(e, iters=3, p=5, layout="rows").collect()}
     assert wide == rowsf
+
+    monkeypatch.setattr(_bcast, "_EDGE_BCAST_MAX_BYTES", 0)
+    wide_shuffled = {
+        (r["t"], r["nf"])
+        for r in hyperanf(e, iters=3, p=5, layout="wide").collect()}
+    con = duckdb.connect()
+    con.sql("CREATE TABLE e(src BIGINT, dst BIGINT)")
+    con.executemany("INSERT INTO e VALUES (?, ?)", rows)
+    want = {tuple(r) for r in
+            con.sql(hyperanf_sql("e", iters=3, p=5)).fetchall()}
+    assert wide_shuffled == rowsf == want
 
 
 def test_hyperanf_wide_layout_caps_p(spark):
@@ -239,14 +255,6 @@ def test_louvain_levels_semantics(spark):
         c1 = lvl1[n]
         assert remap.setdefault(c1, c2) == c2  # coarsening, never a split
     assert len(set(lvl2.values())) <= len(set(lvl1.values()))
-
-    # level1 injection (the shared-pass shape): a precomputed
-    # louvain_moves assignment as level 1 gives a bit-identical
-    # multi-level result
-    injected = sorted(map(tuple, louvain(
-        rdf, iters=4, levels=2,
-        level1=louvain_moves(rdf, iters=4)).collect()))
-    assert injected == sorted(map(tuple, two_df.collect()))
 
     import pytest as _pt
     with _pt.raises(ValueError):

@@ -705,25 +705,36 @@ def _loop_fixtures(spark):
 
 @pytest.mark.parametrize("op,max_jobs,max_py4j", [
     ("pagerank", 23, 290),
+    ("personalized_pagerank", 23, 300),
     ("connected_components", 20, 270),
     ("dbscan", 29, 1150),
+    ("louvain_moves", 35, 4800),
 ])
 def test_loop_ops_build_job_and_py4j_budgets(spark, op, max_jobs, max_py4j):
     """Build-phase ceilings of the loop operators, just above what they
     take with each round built as one SQL statement, the dangling mass
     and the convergence count observed on the round's own checkpoint
-    job, and the node-sized side broadcast (21 jobs / 258 round trips,
-    18 / 242 and 26 / 1,086). Built op by op, the same calls took
-    49 jobs / 1,809 round trips (pagerank, 6 iterations), 49 / 2,854
+    job, and the node-sized side broadcast (21 jobs / 189 round trips
+    for pagerank and 21 / 191 for personalized PageRank, which share
+    the rounds; 18 / 242 and 26 / 1,086). Built op by op, the same
+    calls took 49 jobs / 1,809 round trips (pagerank, 6 iterations),
+    52 / 2,177
+    (personalized PageRank, the same graph and iterations), 49 / 2,854
     (components of a 17-node chain) and 64 / 4,397 (dbscan of 60
-    points)."""
+    points). louvain_moves is louvain's level-1 move kernel (33 jobs /
+    4,577 round trips); its own copy of the kernel took 39 jobs."""
     from simba_spark.operators.clustering import dbscan
     from simba_spark.operators.dedup import connected_components
-    from simba_spark.operators.graph import pagerank
+    from simba_spark.operators.graph import (louvain_moves, pagerank,
+                                             personalized_pagerank)
 
     graph, chain, pts = _loop_fixtures(spark)
+    seeds = spark.createDataFrame([(0,), (7,)], "node long")
     build = {
         "pagerank": lambda: pagerank(graph, iters=6),
+        "personalized_pagerank": lambda: personalized_pagerank(
+            graph, seeds, iters=6),
+        "louvain_moves": lambda: louvain_moves(graph, iters=4),
         "connected_components": lambda: connected_components(chain),
         "dbscan": lambda: dbscan(pts, ["x", "y"], eps=0.7, min_pts=3,
                                  id_col="pid2"),
@@ -781,7 +792,9 @@ def test_loop_ops_broadcast_guard_both_sides(spark, monkeypatch, request,
     duckdb = pytest.importorskip("duckdb")
     from simba_spark.operators import _bcast
     from simba_spark.operators.dedup import connected_components
-    from simba_spark.operators.graph import pagerank, pagerank_sql
+    from simba_spark.operators.graph import (pagerank, pagerank_sql,
+                                             personalized_pagerank,
+                                             personalized_pagerank_sql)
 
     if bound == 0:
         monkeypatch.setattr(_bcast, "_EDGE_BCAST_MAX_BYTES", 0)
@@ -812,6 +825,17 @@ def test_loop_ops_broadcast_guard_both_sides(spark, monkeypatch, request,
         pagerank_sql("e", iters=6, weight="w")).fetchall())
     assert {r.node: r.rank for r in pagerank(
         weighted, iters=6, weight="w").collect()} == want_w
+    seeds = spark.createDataFrame([(0,), (7,)], "node long")
+    want_p = dict(con.execute(personalized_pagerank_sql(
+        "e", "(SELECT 0 AS node UNION ALL SELECT 7)", iters=6)).fetchall())
+    assert {r.node: r.rank for r in personalized_pagerank(
+        graph, seeds, iters=6).collect()} == want_p
+    # every node a seed: plain PageRank, bit for bit
+    every = spark.createDataFrame([(v,) for v in want], "node long")
+    assert {r.node: r.rank for r in personalized_pagerank(
+        graph, every, iters=6, round_to=None).collect()} == {
+        r.node: r.rank for r in pagerank(
+            graph, iters=6, round_to=None).collect()}
 
     two = chain.unionByName(spark.createDataFrame(
         [(100, 101), (101, 102), (102, 100), (7, 7)],

@@ -181,9 +181,13 @@ _PR_SHAPES = {
 @pytest.mark.parametrize("shape", sorted(_PR_SHAPES))
 def test_pagerank_adversarial_shapes_match_duckdb(spark, shape):
     """Structural edge cases dense random fixtures miss, unweighted and
-    weighted, bit-equal to the unrolled DuckDB oracle."""
+    weighted, bit-equal to the unrolled DuckDB oracle; personalized
+    PageRank too, seeded with the graph's smallest node and one node
+    outside it (with no edges there is no seed in the graph: it raises)."""
     duckdb = pytest.importorskip("duckdb")
-    from simba_spark.operators.graph import pagerank, pagerank_sql
+    from simba_spark.operators.graph import (pagerank, pagerank_sql,
+                                             personalized_pagerank,
+                                             personalized_pagerank_sql)
 
     rows = [(s, d, float(1 + (s + d) % 3)) for s, d in _PR_SHAPES[shape]]
     df = spark.createDataFrame(rows, "src long, dst long, w double")
@@ -199,6 +203,21 @@ def test_pagerank_adversarial_shapes_match_duckdb(spark, shape):
         assert got == want, weight
         if rows:
             assert sum(got.values()) == pytest.approx(1.0, abs=1e-4)
+
+    picks = [min(v for r in rows for v in r[:2])] if rows else []
+    seeds = spark.createDataFrame([(v,) for v in picks + [1000]],
+                                  "node long")
+    if not rows:
+        with pytest.raises(ValueError, match="no seed"):
+            personalized_pagerank(df, seeds, iters=6)
+        return
+    got = {r["node"]: r["rank"]
+           for r in personalized_pagerank(df, seeds, iters=6).collect()}
+    want = dict(con.execute(personalized_pagerank_sql(
+        "e", f"(SELECT {picks[0]} AS node UNION ALL SELECT 1000)",
+        iters=6)).fetchall())
+    assert got == want
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-4)
 
 
 def test_pagerank_dangling_mass_conserved(spark):
